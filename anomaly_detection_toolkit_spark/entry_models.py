@@ -244,7 +244,7 @@ def streaming_sliding_buffer_events(spark: SparkSession, sf_dir: str) -> DataFra
         )
         (part,) = _glob.glob(os.path.join(stage, "part-*.json"))
         dst = os.path.join(src, f"b{i}.json")
-        _shutil.move(part, dst)
+        _shutil.copyfile(part, dst)
         os.utime(dst, (base_t + i * 60, base_t + i * 60))
     events.unpersist()
     stream = (
@@ -1019,7 +1019,7 @@ def streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.coalesce(1).write.json(stage)
     (part,) = _glob.glob(os.path.join(stage, "part-*.json"))
     b0 = os.path.join(src, "b0.json")
-    _shutil.move(part, b0)
+    _shutil.copyfile(part, b0)
     b1 = os.path.join(src, "b1.json")
     with open(b1, "w") as f:
         f.write(json.dumps({"ts": max_ts + 1e9, "bucket": 0.0}) + "\n")
@@ -1120,7 +1120,7 @@ def streaming_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         (part,) = _glob.glob(os.path.join(stage, "part-*.json"))
         dst = os.path.join(src, f"b{i}.json")
-        _shutil.move(part, dst)
+        _shutil.copyfile(part, dst)
         os.utime(dst, (base_t + i * 60, base_t + i * 60))
     docs.unpersist()
     stream = (

@@ -12,7 +12,8 @@ corpus-sized cost ONCE:
   Arrow-batched assignment pass over the corpus, written as a
   CELL-PARTITIONED parquet inverted file (hive layout
   ``cells/cell=<c>/src_part=<p>/``) with per-row norms precomputed;
-  centroids in ``centroids.parquet`` + config in ``manifest.json``.
+  centroids in ``_centroids.parquet`` + config in ``_manifest.json``
+  next to the cells (the ``_`` hides them from Spark and pyarrow).
 - ``ivf_query``: a query batch reads ONLY its probed cells. The probe
   set is collected from the (tiny, broadcastable-by-contract) query
   batch and pushed as a STATIC partition filter, so the parquet scan
@@ -27,6 +28,9 @@ corpus-sized cost ONCE:
   rows are re-assigned and appended, centroids FIXED. Reconstruction
   invariant (incremental ∪ unchanged == full rebuild) pinned by
   tests/test_ivf_index.py.
+
+``<index>/cells`` is published through ``versioned``: each build or
+update writes a whole new version, so readers never see a mix.
 
 Centroids are frozen at build time — the standard IVF practice; the
 index is an approximation of the corpus distribution at build time.
@@ -60,6 +64,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from anomaly_detection_toolkit_spark import versioned
 from anomaly_detection_toolkit_spark.operators.similarity import (
     collect_vector_sample,
     dot,
@@ -69,8 +74,8 @@ from anomaly_detection_toolkit_spark.operators.similarity import (
     topk_rerank,
 )
 
-MANIFEST = "manifest.json"
-CENTROIDS = "centroids.parquet"
+MANIFEST = "_manifest.json"
+CENTROIDS = "_centroids.parquet"
 CELLS = "cells"
 
 
@@ -87,7 +92,7 @@ def _assign(
     closure; nothing shuffles until the partitioned write."""
     cell_of, _ = ivf_cell_udfs(cent, n_probe=1)
     src = (
-        F.col(src_part_col).cast("int")
+        F.col(src_part_col).try_cast("int")
         if src_part_col is not None
         else F.lit(0)
     )
@@ -118,82 +123,84 @@ def build_ivf_index(
     the partition columns so each hive partition is written by one
     task (no small-files explosion at high parallelism).
 
-    Crash safety for rebuild-in-place (the drift-retrain path): the
-    COMPLETE new index — cells, centroids AND manifest — is built
-    under a pid-unique ``<index_path>.build.tmp.<pid>`` and swapped in with two renames
-    only once it is whole, so a crash mid-build leaves the old index
-    fully intact and a crash between the renames leaves it under
-    ``<index_path>.old`` for manual recovery. Without the staging,
-    a crash after the corpus-sized cells overwrite but before the
-    manifest write would pair NEW assignments with OLD centroids —
-    silently wrong probes, no error."""
-    x = collect_vector_sample(corpus, id_col, vec_col, max_fit_rows, seed)
-    cent = fit_kmeans_arrays(x, n_cells, n_iter=n_iter)
-    assigned = _assign(corpus, cent, id_col, vec_col, src_part_col)
-    # pid-unique staging: two processes racing to build the same path
-    # (e.g. the entry cache's deterministic dir) never clobber each
-    # other's in-progress staging; the loser of the final rename race
-    # fails LOUDLY (ENOENT/EEXIST), never silently corrupts
-    staging = f"{index_path.rstrip('/')}.build.tmp.{os.getpid()}"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    (
-        assigned.repartition("cell", "src_part")
-        .write.mode("overwrite")
-        .partitionBy("cell", "src_part")
-        .parquet(os.path.join(staging, CELLS))
-    )
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    Cells, centroids and manifest are published together as one
+    version, so a rebuild in place never pairs new assignments with
+    old centroids. Rows with NULL or non-int ``src_part_col`` values
+    land in ``src_part=__HIVE_DEFAULT_PARTITION__``, beyond any
+    update's reach: finding that leaf in the written version (no Spark
+    job) raises ``ValueError`` before publishing."""
+    cells = os.path.join(index_path, CELLS)
+    with versioned.new_version(cells) as ver:
+        x = collect_vector_sample(corpus, id_col, vec_col, max_fit_rows, seed)
+        cent = fit_kmeans_arrays(x, n_cells, n_iter=n_iter)
+        (
+            _assign(corpus, cent, id_col, vec_col, src_part_col)
+            .repartition("cell", "src_part")
+            .write.partitionBy("cell", "src_part")
+            .parquet(ver)
+        )
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    pq.write_table(
-        pa.table(
-            {
-                "cell": pa.array(range(n_cells), pa.int32()),
-                "centroid": pa.array(
-                    [list(map(float, row)) for row in cent],
-                    pa.list_(pa.float64()),
-                ),
-            }
-        ),
-        os.path.join(staging, CENTROIDS),
-    )
-    manifest = {
-        "version": 1,
-        "n_cells": int(n_cells),
-        "dim": int(cent.shape[1]),
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "src_part_col": src_part_col,
-        "seed": int(seed),
-        "n_iter": int(n_iter),
-        "max_fit_rows": int(max_fit_rows),
-    }
-    with open(os.path.join(staging, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1)
-    old = index_path.rstrip("/") + ".old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(index_path):
-        os.rename(index_path, old)
-    os.rename(staging, index_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+        bad = glob.glob(
+            os.path.join(ver, "cell=*", "src_part=__HIVE_DEFAULT_PARTITION__", "*.parquet")
+        )
+        if bad:
+            n_bad = sum(pq.read_metadata(f).num_rows for f in bad)
+            shutil.rmtree(ver)  # never published: the old index stays served
+            raise ValueError(
+                f"build_ivf_index: {n_bad} rows with NULL (or non-integer) "
+                f"{src_part_col!r} — source-partition lineage must be "
+                "non-null and int-castable"
+            )
+        pq.write_table(
+            pa.table(
+                {
+                    "cell": pa.array(range(n_cells), pa.int32()),
+                    "centroid": pa.array(
+                        [list(map(float, row)) for row in cent],
+                        pa.list_(pa.float64()),
+                    ),
+                }
+            ),
+            os.path.join(ver, CENTROIDS),
+        )
+        manifest = {
+            "version": 1,
+            "n_cells": int(n_cells),
+            "dim": int(cent.shape[1]),
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "src_part_col": src_part_col,
+            "seed": int(seed),
+            "n_iter": int(n_iter),
+            "max_fit_rows": int(max_fit_rows),
+        }
+        with open(os.path.join(ver, MANIFEST), "w") as f:
+            json.dump(manifest, f, indent=1)
+        versioned.publish(cells, ver)
     return manifest
 
 
-def load_ivf_manifest(index_path: str) -> tuple[dict, np.ndarray]:
-    """(manifest, centroid matrix) — centroids ordered by cell id."""
+def _open(index_path: str) -> tuple[str, dict, np.ndarray]:
+    """(version dir, manifest, centroids by cell id) of the index
+    version published now: all three from one version."""
     import pyarrow.parquet as pq
 
-    with open(os.path.join(index_path, MANIFEST)) as f:
+    ver = versioned.resolve(os.path.join(index_path, CELLS))
+    with open(os.path.join(ver, MANIFEST)) as f:
         manifest = json.load(f)
-    t = pq.read_table(os.path.join(index_path, CENTROIDS))
+    t = pq.read_table(os.path.join(ver, CENTROIDS))
     order = np.argsort(t.column("cell").to_numpy())
     cent = np.stack(
         [np.asarray(v, dtype=np.float64) for v in t.column("centroid").to_pylist()]
     )[order]
-    return manifest, cent
+    return ver, manifest, cent
+
+
+def load_ivf_manifest(index_path: str) -> tuple[dict, np.ndarray]:
+    """(manifest, centroid matrix) — centroids ordered by cell id."""
+    return _open(index_path)[1:]
 
 
 def read_probed_cells(
@@ -203,9 +210,9 @@ def read_probed_cells(
     the hive partition column becomes a PartitionFilter in the scan:
     only the probed cell directories are listed/read — this is the
     partition-pruning contract the plan test pins."""
-    return spark.read.parquet(os.path.join(index_path, CELLS)).filter(
-        F.col("cell").isin([int(c) for c in cells])
-    )
+    return spark.read.parquet(
+        versioned.resolve(os.path.join(index_path, CELLS))
+    ).filter(F.col("cell").isin([int(c) for c in cells]))
 
 
 def ivf_query(
@@ -229,8 +236,10 @@ def ivf_query(
     ``id_col``/``vec_col`` default to the manifest's (queries usually
     come from the same table family as the corpus).
 
+    Manifest, centroids and cells come from one index version.
+
     Output: (query_id, neighbor_id, cosine_sim, rank)."""
-    manifest, cent = load_ivf_manifest(index_path)
+    ver, manifest, cent = _open(index_path)
     id_col = id_col or manifest["id_col"]
     vec_col = vec_col or manifest["vec_col"]
     _, probe_of = ivf_cell_udfs(cent, n_probe)
@@ -243,7 +252,7 @@ def ivf_query(
     probe_cells = sorted(
         r["cell"] for r in q.select("cell").distinct().collect()
     )
-    c = read_probed_cells(spark, index_path, probe_cells).select(
+    c = spark.read.parquet(ver).filter(F.col("cell").isin(probe_cells)).select(
         F.col(manifest["id_col"]).alias("neighbor_id"),
         F.col(manifest["vec_col"]).alias("cv"),
         F.col("nrm").alias("cn"),
@@ -277,88 +286,63 @@ def update_ivf_index(
     when a partition was DELETED upstream (present in the old index,
     absent from ``changed_df``) so its rows are dropped too.
 
-    The stale-row delete is a partition-level directory removal on
-    the second hive level (``cell=*/src_part=<p>``) — local-FS
-    semantics here; on an object store/catalog the equivalent is a
-    partition-predicate DELETE. Never rewrites unchanged cells: the
-    corpus² assignment work is never re-run, mirroring
-    ``dedup.incremental_lsh_pairs``.
-
-    Crash safety: the replacement rows are fully WRITTEN (to a
-    staging dir) before any stale dir is removed, then moved into
-    place with per-partition renames — a failed Spark job leaves the
-    index untouched, and a crash mid-move leaves the staging dir
-    intact so a rerun of the same update self-heals (it rewrites the
-    staging dir, re-deletes, re-moves).
-
-    NOT atomic versus concurrent queries: between the stale-dir
-    delete and the last rename, an in-flight ``ivf_query`` probing a
-    changed cell can miss that partition's rows (or hit a listed-
-    then-deleted file). Same semantics as any hive-partition-level
-    data maintenance — schedule updates in a maintenance window, or
-    serve queries from a copy/previous index dir while updating. An
-    Iceberg-backed inverted file (swap this layout for a catalog
-    table) gets snapshot-isolated updates for free."""
-    manifest, cent = load_ivf_manifest(index_path)
-    src_part_col = manifest.get("src_part_col")
-    if src_part_col is None:
-        raise ValueError(
-            "update_ivf_index: index was built without src_part_col — "
-            "incremental updates need source-partition lineage; rebuild "
-            "with build_ivf_index(..., src_part_col=...)"
-        )
-    # NULL lineage is rejected in BOTH branches: with inferred parts a
-    # null would land in __HIVE_DEFAULT_PARTITION__ and never be
-    # refreshable; with an explicit list the isin filter below would
-    # SILENTLY drop the row (NULL is not true) — the vector would be
-    # permanently absent from the index with no error
-    vals = [
-        r["p"]
-        for r in changed_df.select(
-            F.col(src_part_col).cast("int").alias("p")  # match _assign's cast
-        )
-        .distinct()
-        .collect()
-    ]
-    if any(v is None for v in vals):
-        raise ValueError(
-            f"update_ivf_index: NULL (or non-integer) values in "
-            f"{src_part_col!r} — source-partition lineage must be "
-            "non-null and int-castable"
-        )
-    if changed_parts is None:
-        changed_parts = sorted(int(v) for v in vals)
+    Copy-on-write: the new version hard-links the current one minus
+    the changed ``src_part=<p>`` leaves, appends the re-assigned rows
+    and is published whole (unchanged cells are never rewritten,
+    mirroring ``dedup.incremental_lsh_pairs``). On an object
+    store/catalog the equivalent is a partition-predicate DELETE +
+    append committed as one snapshot."""
     cells_path = os.path.join(index_path, CELLS)
-    assigned = _assign(
-        changed_df, cent, manifest["id_col"], manifest["vec_col"], src_part_col
-    )
-    # with an EXPLICIT changed_parts list, rows of other partitions
-    # must not append — their old index rows were never dropped, so
-    # appending them again would duplicate
-    assigned = assigned.filter(
-        F.col("src_part").isin([int(p) for p in changed_parts])
-    )
-    # stage first: the delete below must only run once the
-    # replacement rows are durably on disk
-    staging = cells_path + ".update.tmp"
-    (
-        assigned.repartition("cell", "src_part")
-        .write.mode("overwrite")
-        .partitionBy("cell", "src_part")
-        .parquet(staging)
-    )
-    for p in changed_parts:
-        for d in glob.glob(
-            os.path.join(cells_path, "cell=*", f"src_part={int(p)}")
-        ):
-            shutil.rmtree(d)
-    for part_dir in glob.glob(os.path.join(staging, "cell=*", "src_part=*")):
-        cell_dir, leaf = os.path.split(part_dir)
-        dest_cell = os.path.join(cells_path, os.path.basename(cell_dir))
-        os.makedirs(dest_cell, exist_ok=True)
-        dest = os.path.join(dest_cell, leaf)
-        if os.path.isdir(dest):  # rerun after a mid-move crash
-            shutil.rmtree(dest)
-        os.rename(part_dir, dest)
-    shutil.rmtree(staging)
+    with versioned.new_version(cells_path) as ver:
+        cur, manifest, cent = _open(index_path)
+        src_part_col = manifest.get("src_part_col")
+        if src_part_col is None:
+            raise ValueError(
+                "update_ivf_index: index was built without src_part_col — "
+                "incremental updates need source-partition lineage; rebuild "
+                "with build_ivf_index(..., src_part_col=...)"
+            )
+        # NULL lineage is rejected in BOTH branches: with inferred parts a
+        # null would land in __HIVE_DEFAULT_PARTITION__ and never be
+        # refreshable; with an explicit list the isin filter below would
+        # SILENTLY drop the row (NULL is not true) — the vector would be
+        # permanently absent from the index with no error
+        vals = [
+            r["p"]
+            for r in changed_df.select(
+                F.col(src_part_col).try_cast("int").alias("p")  # match _assign's cast
+            )
+            .distinct()
+            .collect()
+        ]
+        if any(v is None for v in vals):
+            raise ValueError(
+                f"update_ivf_index: NULL (or non-integer) values in "
+                f"{src_part_col!r} — source-partition lineage must be "
+                "non-null and int-castable"
+            )
+        if changed_parts is None:
+            changed_parts = sorted(int(v) for v in vals)
+        assigned = _assign(
+            changed_df, cent, manifest["id_col"], manifest["vec_col"], src_part_col
+        )
+        # with an EXPLICIT changed_parts list, rows of other partitions
+        # must not append — their old index rows were never dropped, so
+        # appending them again would duplicate
+        assigned = assigned.filter(
+            F.col("src_part").isin([int(p) for p in changed_parts])
+        )
+        # the Spark write below rewrites _SUCCESS: never share its inode
+        stale = [f"src_part={int(p)}" for p in changed_parts]
+        shutil.copytree(
+            cur, ver, copy_function=os.link,
+            ignore=shutil.ignore_patterns("*_SUCCESS*", *stale),
+        )
+        (
+            assigned.repartition("cell", "src_part")
+            .write.mode("append")
+            .partitionBy("cell", "src_part")
+            .parquet(ver)
+        )
+        versioned.publish(cells_path, ver)
     return list(changed_parts)

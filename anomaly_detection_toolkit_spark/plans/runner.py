@@ -17,11 +17,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from anomaly_detection_toolkit_spark import versioned
 from anomaly_detection_toolkit_spark.plans.checks import (
     Check,
     empty_metrics,
@@ -304,6 +306,10 @@ def snapshot_id(input_path: str) -> str:
                 continue
             p = os.path.join(root, fn)
             st = os.stat(p)
+            # name+size alone misses an in-place same-size rewrite
+            # (fixed-width re-ingest): include mtime so a touched
+            # partition re-validates rather than silently keeping
+            # stale verdicts
             h.update(
                 f"{os.path.relpath(p, input_path)}:{st.st_size}:{st.st_mtime_ns}".encode()
             )
@@ -319,8 +325,6 @@ def partition_fingerprints(input_path: str, part_col: str = "part") -> dict[int,
     lets the ledger re-validate only partitions whose bytes actually
     changed instead of the whole table. Returns {} for a table that is
     not directory-partitioned (callers fall back to a full re-run)."""
-    import hashlib
-
     fps: dict[int, str] = {}
     prefix = f"{part_col}="
     if not os.path.isdir(input_path):
@@ -333,21 +337,7 @@ def partition_fingerprints(input_path: str, part_col: str = "part") -> dict[int,
             part = int(entry[len(prefix):])
         except ValueError:
             continue
-        h = hashlib.sha256()
-        for root, _dirs, files in sorted(os.walk(full)):
-            for fn in sorted(files):
-                if fn.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                # name+size alone misses an in-place same-size rewrite
-                # (fixed-width re-ingest): include mtime so a touched
-                # partition re-validates rather than silently keeping
-                # stale verdicts
-                h.update(
-                    f"{os.path.relpath(p, full)}:{st.st_size}:{st.st_mtime_ns}".encode()
-                )
-        fps[part] = h.hexdigest()[:16]
+        fps[part] = snapshot_id(full)
     return fps
 
 
@@ -366,26 +356,25 @@ class Ledger:
 
     def save(self, state: dict) -> None:
         os.makedirs(self.dir, exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        versioned.write_file(self.path, json.dumps(state, indent=1, sort_keys=True))
 
-    def remaining_parts(self, snap: str, all_parts: list[int]) -> list[int]:
-        state = self.load()
-        if state["snapshot_id"] != snap:
-            return list(all_parts)  # new snapshot → full re-run
-        done = set(state["completed_parts"])
-        return [p for p in all_parts if p not in done]
+    @contextmanager
+    def edit(self):
+        """The state for one read-modify-write under the ledger's lock
+        (a second writer raises), saved when the block completes."""
+        with versioned.lock(self.dir):
+            state = self.load()
+            yield state
+            self.save(state)
 
     def remaining_parts_incremental(
         self, snap: str, all_parts: list[int], fps: dict[int, str]
     ) -> list[int]:
         """Incremental planning: on a NEW snapshot, re-validate only
         partitions that are new, were never completed, or whose file
-        fingerprint changed since they were validated. A legacy ledger
-        without fingerprints (or a non-directory-partitioned table,
-        fps={}) degrades to the full re-run of ``remaining_parts``."""
+        fingerprint changed since they were validated. Without
+        fingerprints (legacy ledger, non-incremental run, flat table:
+        fps={}) a new snapshot re-runs every partition."""
         state = self.load()
         done = set(state["completed_parts"])
         if state["snapshot_id"] == snap:
@@ -417,62 +406,49 @@ class Ledger:
         matches the current one stay completed; only stale entries are
         dropped. ``fingerprints`` records the validated parts' hashes
         for future incremental runs."""
-        state = self.load()
-        if state["snapshot_id"] != snap:
-            # completed parts reset (or carry forward under carry_fps)
-            # but the RUN history, run-seq counter and recorded schema
-            # survive snapshot advances: run_seq must stay monotonic
-            # or sink rows from different snapshots would collide on
-            # the same run_seq (history_drift keys its
-            # current-vs-history split on it), and the schema baseline
-            # must outlive the snapshot or evolution at a snapshot
-            # boundary — the common case — would never be diffed
-            keep_keys = {
-                k: state[k]
-                for k in ("runs", "next_run_seq", "table_schema")
-                if k in state
-            }
-            if carry_fps is not None:
-                recorded = state.get("part_fingerprints", {})
-                keep = [
-                    p
-                    for p in state["completed_parts"]
-                    if recorded.get(str(p)) is not None
-                    and recorded.get(str(p)) == carry_fps.get(p)
-                ]
-                state = {
-                    "snapshot_id": snap,
-                    "completed_parts": keep,
-                    "part_fingerprints": {str(p): recorded[str(p)] for p in keep},
-                    **keep_keys,
-                }
-            else:
-                state = {
-                    "snapshot_id": snap,
-                    "completed_parts": [],
-                    **keep_keys,
-                }
-        state["completed_parts"] = sorted(set(state["completed_parts"]) | set(parts))
-        if fingerprints:
-            pf = state.setdefault("part_fingerprints", {})
-            pf.update({str(p): v for p, v in fingerprints.items()})
-        if table_schema is not None:
-            state["table_schema"] = table_schema
-        # default past BOTH the run log and any burned reservation —
-        # a crashed job's reserved seq tagged sink rows, so minting it
-        # again would collide in every history baseline
-        seq = (
-            max(len(state["runs"]), int(state.get("next_run_seq", 0)))
-            if run_seq is None
-            else int(run_seq)
-        )
-        state["runs"].append(
-            {"ts": time.time(), "run_seq": seq,
-             "snapshot_id": snap, "parts": sorted(parts),
-             "outputs": outputs}
-        )
-        state["next_run_seq"] = max(int(state.get("next_run_seq", 0)), seq + 1)
-        self.save(state)
+        with self.edit() as state:
+            if state["snapshot_id"] != snap:
+                # completed parts reset (or carry forward under
+                # carry_fps) but the RUN history, run-seq counter and
+                # recorded schema survive snapshot advances: run_seq
+                # must stay monotonic or sink rows from different
+                # snapshots would collide on the same run_seq
+                # (history_drift keys its current-vs-history split on
+                # it), and the schema baseline must outlive the
+                # snapshot or evolution at a snapshot boundary — the
+                # common case — would never be diffed
+                recorded = state.pop("part_fingerprints", {})
+                keep = []
+                if carry_fps is not None:
+                    keep = [
+                        p
+                        for p in state["completed_parts"]
+                        if recorded.get(str(p)) is not None
+                        and recorded.get(str(p)) == carry_fps.get(p)
+                    ]
+                    state["part_fingerprints"] = {str(p): recorded[str(p)] for p in keep}
+                state["snapshot_id"] = snap
+                state["completed_parts"] = keep
+            state["completed_parts"] = sorted(set(state["completed_parts"]) | set(parts))
+            if fingerprints:
+                pf = state.setdefault("part_fingerprints", {})
+                pf.update({str(p): v for p, v in fingerprints.items()})
+            if table_schema is not None:
+                state["table_schema"] = table_schema
+            # default past BOTH the run log and any burned reservation —
+            # a crashed job's reserved seq tagged sink rows, so minting it
+            # again would collide in every history baseline
+            seq = (
+                max(len(state["runs"]), int(state.get("next_run_seq", 0)))
+                if run_seq is None
+                else int(run_seq)
+            )
+            state["runs"].append(
+                {"ts": time.time(), "run_seq": seq,
+                 "snapshot_id": snap, "parts": sorted(parts),
+                 "outputs": outputs}
+            )
+            state["next_run_seq"] = max(int(state.get("next_run_seq", 0)), seq + 1)
 
     def reserve_run_seq(self) -> int:
         """Allocate the next run_seq and persist the bump BEFORE any
@@ -480,11 +456,69 @@ class Ledger:
         and ``record()``, the reserved seq is simply skipped — the
         next run can never re-tag rows with an already-used run_seq
         (which would double-count a run in every history baseline)."""
-        state = self.load()
-        seq = max(int(state.get("next_run_seq", 0)), len(state.get("runs", [])))
-        state["next_run_seq"] = seq + 1
-        self.save(state)
+        with self.edit() as state:
+            seq = max(int(state.get("next_run_seq", 0)), len(state.get("runs", [])))
+            state["next_run_seq"] = seq + 1
         return seq
+
+
+def append_sinks(
+    output_dir: str,
+    frames: dict[str, DataFrame],
+    run_seq: int | None = None,
+    snapshot_id: str | None = None,
+) -> dict[str, str]:
+    """Append each frame to sink ``<output_dir>/<name>`` (tagged with
+    the run's lineage when ``run_seq`` is given); returns the paths.
+    All sink locks are taken before the first write, so a concurrent
+    compaction fails this call before any row lands."""
+    with ExitStack() as stack:
+        dirs = {
+            name: stack.enter_context(
+                versioned.appending(os.path.join(output_dir, name))
+            )
+            for name in frames
+        }
+        for name, df in frames.items():
+            if run_seq is not None:
+                df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
+                    "snapshot_id", F.lit(snapshot_id).cast("string")
+                )
+            df.write.mode("append").parquet(dirs[name])
+    return {name: os.path.join(output_dir, name) for name in frames}
+
+
+def append_run(
+    spark: SparkSession,
+    ledger: Ledger,
+    output_dir: str,
+    result: SuiteResult,
+    snap,
+    prev_schema: dict[str, str] | None,
+    cur_schema: dict[str, str],
+) -> tuple[int, dict[str, str]]:
+    """Append a suite run's verdicts, violations (plus warning rows
+    for undeclared schema evolution) and metrics; returns (run_seq,
+    sink paths). Every row carries its run lineage: the run_seq is
+    RESERVED before any sink write, so a crash mid-job can never lead
+    to a reused run_seq in the history that history_drift scores."""
+    from anomaly_detection_toolkit_spark.plans.checks import (
+        schema_evolution_violations,
+    )
+
+    run_seq = ledger.reserve_run_seq()
+    evo = schema_evolution_violations(spark, prev_schema, cur_schema)
+    outputs = append_sinks(
+        output_dir,
+        {
+            "verdicts": result.verdicts,
+            "violations": result.violations.unionByName(evo),
+            "metrics": result.metrics,
+        },
+        run_seq,
+        str(snap),
+    )
+    return run_seq, outputs
 
 
 def compact_sinks(
@@ -507,22 +541,15 @@ def compact_sinks(
     sinks into a classic small-files problem (listing + footer reads
     dominate). The sinks stay small in BYTES, so compaction is a
     single read→write of each (with ``mergeSchema`` so pre-lineage
-    rows keep their NULL ``run_seq``), verified by row count before
-    the swap; the previous files are kept as ``<sink>.bak`` until the
-    swap completes. Local-filesystem semantics — on Iceberg-backed
-    sinks use the catalog's ``rewrite_data_files`` instead.
+    rows keep their NULL ``run_seq``) into a new sink version,
+    verified by row count and published with one atomic flip
+    (``versioned``). On Iceberg-backed sinks use the catalog's
+    ``rewrite_data_files`` instead.
 
-    Concurrency: compaction is NOT safe against a validation run
-    appending to the same sink mid-compaction — files landing after
-    the initial listing would be silently dropped by the swap. The
-    file listing is therefore re-checked immediately before the swap
-    and the sink is skipped (entry ``(-1, files_now)``) if it
-    changed. After the first compaction each sink path is a SYMLINK
-    to a versioned data dir (``<sink>.data0``/``.data1``) and the
-    swap is one atomic rename of a fresh symlink — readers never see
-    an absent sink. Only the initial plain-dir→symlink conversion
-    retains a two-syscall absence window (once per sink ever), with
-    ``<sink>.bak`` intact for manual recovery on a crash in the gap.
+    A concurrent compaction or ``append_sinks`` raises
+    ``versioned.ConcurrentWriteError``; a writer that bypasses the
+    lock and changes the listing after the read makes the sink skip
+    (entry ``(-1, files_now)``).
 
     Returns ``{sink: (rows, files_before)}`` for what was compacted;
     a skipped sink maps to ``(-1, current_file_count)``.
@@ -530,7 +557,6 @@ def compact_sinks(
     row-count verification and the re-listing (how the
     concurrent-append skip is exercised deterministically).
     """
-    import shutil
 
     def _listing(p: str) -> set[str]:
         return {
@@ -545,62 +571,24 @@ def compact_sinks(
         path = os.path.join(output_dir, sink)
         if not os.path.isdir(path):
             continue
-        files_before = _listing(path)
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        tmp = path + ".compact.tmp"
-        df.coalesce(max(1, int(target_files))).write.mode("overwrite").parquet(tmp)
-        n_before = df.count()
-        n_after = spark.read.parquet(tmp).count()
-        if n_after != n_before:  # pragma: no cover - defensive
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compaction of {sink} lost rows ({n_before} -> {n_after})"
-            )
-        if _pre_swap_hook is not None:
-            _pre_swap_hook(sink)
-        now = _listing(path)
-        if now != files_before:
-            # a concurrent run appended (or pruned) files after the
-            # read — swapping now would silently lose those rows
-            shutil.rmtree(tmp)
-            done[sink] = (-1, len(now))
-            continue
-        bak = path + ".bak"
-        if os.path.isdir(bak):
-            shutil.rmtree(bak)
-        if os.path.islink(path):
-            # steady state: <sink> is a symlink to a versioned data
-            # dir (<sink>.data0/.data1), so the swap is ONE atomic
-            # rename of a fresh symlink over the old one — readers
-            # never observe an absent sink path. The superseded data
-            # dir is NOT deleted here: a reader that resolved the
-            # symlink just before the flip may still be mid-read in
-            # it, so it lingers one cycle (sinks are tiny) and the
-            # NEXT compaction's rmtree below reclaims it.
-            old_data = os.path.realpath(path)
-            new_data = path + (
-                ".data1" if old_data.endswith(".data0") else ".data0"
-            )
-            if os.path.isdir(new_data):
-                shutil.rmtree(new_data)
-            os.rename(tmp, new_data)
-            swap = path + ".swap"
-            if os.path.lexists(swap):
-                os.remove(swap)
-            os.symlink(os.path.basename(new_data), swap)
-            os.rename(swap, path)
-        else:
-            # first compaction converts the plain append dir into the
-            # symlink layout; the only brief-absence window (two
-            # syscalls between the renames) lives here, once per sink
-            # ever, with <sink>.bak intact for recovery on a crash
-            new_data = path + ".data0"
-            if os.path.isdir(new_data):
-                shutil.rmtree(new_data)
-            os.rename(tmp, new_data)
-            os.rename(path, bak)
-            os.symlink(os.path.basename(new_data), path)
-            shutil.rmtree(bak)
+        with versioned.new_version(path) as new:
+            cur = versioned.resolve(path)
+            files_before = _listing(cur)
+            df = spark.read.option("mergeSchema", "true").parquet(cur)
+            df.coalesce(max(1, int(target_files))).write.parquet(new)
+            n_before = df.count()
+            n_after = spark.read.parquet(new).count()
+            if n_after != n_before:  # pragma: no cover - defensive
+                raise RuntimeError(
+                    f"compaction of {sink} lost rows ({n_before} -> {n_after})"
+                )
+            if _pre_swap_hook is not None:
+                _pre_swap_hook(sink)
+            now = _listing(cur)
+            if now != files_before:  # publishing would lose those rows
+                done[sink] = (-1, len(now))
+                continue
+            versioned.publish(path, new)
         done[sink] = (n_after, len(files_before))
     return done
 
@@ -628,21 +616,18 @@ def record_schema_only_change(
     if prev_schema is None or not schema_diff(prev_schema, cur_schema):
         return False
     run_seq = ledger.reserve_run_seq()
-    path = os.path.join(output_dir, "violations")
-    schema_evolution_violations(spark, prev_schema, cur_schema).withColumn(
-        "run_seq", F.lit(run_seq)
-    ).withColumn("snapshot_id", F.lit(str(snap))).write.mode("append").parquet(path)
+    evo = schema_evolution_violations(spark, prev_schema, cur_schema)
+    outputs = append_sinks(output_dir, {"violations": evo}, run_seq, str(snap))
     # advance ONLY the schema baseline + run log — snapshot_id and
     # completed_parts are the validation planner's bookkeeping and a
     # metadata-only run must not disturb them
-    state = ledger.load()
-    state["table_schema"] = cur_schema
-    state.setdefault("runs", []).append(
-        {"ts": time.time(), "run_seq": run_seq, "snapshot_id": snap,
-         "parts": [], "outputs": {"violations": path},
-         "schema_only": True}
-    )
-    ledger.save(state)
+    with ledger.edit() as state:
+        state["table_schema"] = cur_schema
+        state.setdefault("runs", []).append(
+            {"ts": time.time(), "run_seq": run_seq, "snapshot_id": snap,
+             "parts": [], "outputs": outputs,
+             "schema_only": True}
+        )
     return True
 
 
@@ -672,12 +657,8 @@ def run_validation_job(
     snap = snapshot_id(input_path)
     ledger = Ledger(os.path.join(output_dir, "_ledger"))
     all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
-    fps: dict[int, str] = {}
-    if incremental:
-        fps = partition_fingerprints(input_path, part_col)
-        todo = ledger.remaining_parts_incremental(snap, all_parts, fps)
-    else:
-        todo = ledger.remaining_parts(snap, all_parts)
+    fps = partition_fingerprints(input_path, part_col) if incremental else {}
+    todo = ledger.remaining_parts_incremental(snap, all_parts, fps)
     cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     prev_schema = ledger.load().get("table_schema")
     if not todo:
@@ -691,30 +672,9 @@ def run_validation_job(
     result = run_suite(
         df, checks, part_col=part_col, parts=todo, violations_cap=violations_cap
     )
-    # run lineage: every appended sink row carries which run (a
-    # monotonically increasing per-output-dir sequence, RESERVED in
-    # the ledger before any sink write so a crash mid-job can never
-    # lead to a reused run_seq) and which input snapshot produced it
-    # — the metrics history that history_drift scores across runs
-    run_seq = ledger.reserve_run_seq()
-    # undeclared schema evolution vs the previous run (metadata-only;
-    # warning rows — the declared SchemaCheck stays the error gate)
-    from anomaly_detection_toolkit_spark.plans.checks import (
-        schema_evolution_violations,
+    run_seq, outputs = append_run(
+        spark, ledger, output_dir, result, snap, prev_schema, cur_schema
     )
-
-    evo = schema_evolution_violations(spark, prev_schema, cur_schema)
-    outputs = {}
-    for name, out_df in (
-        ("verdicts", result.verdicts),
-        ("violations", result.violations.unionByName(evo)),
-        ("metrics", result.metrics),
-    ):
-        path = os.path.join(output_dir, name)
-        out_df.withColumn("run_seq", F.lit(run_seq)).withColumn(
-            "snapshot_id", F.lit(str(snap))
-        ).write.mode("append").parquet(path)
-        outputs[name] = path
     ledger.record(
         snap,
         result.parts_checked,

@@ -288,7 +288,7 @@ def run_validation_job_iceberg(
     import os
 
     from anomaly_detection_toolkit_spark.plans.checks import default_suite
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger, run_suite
+    from anomaly_detection_toolkit_spark.plans.runner import Ledger, append_run, run_suite
 
     snapshots_df, entries_df = load_metadata(spark, table)
     snap = snapshot_id if snapshot_id is not None else current_snapshot_id(snapshots_df)
@@ -336,29 +336,10 @@ def run_validation_job_iceberg(
         parts=todo,
         violations_cap=violations_cap,
     )
-    # run lineage columns (see plans/runner.run_validation_job): here
-    # snapshot_id is the REAL Iceberg snapshot the read was pinned to,
-    # and the seq is reserved in the ledger BEFORE sink writes so a
-    # crash mid-job can never lead to a reused run_seq
-    run_seq = ledger.reserve_run_seq()
-    # undeclared schema evolution vs the previous run's recorded
-    # schema (Iceberg tables evolve schemas in-place; metadata-only)
-    from anomaly_detection_toolkit_spark.plans.checks import (
-        schema_evolution_violations,
+    # lineage snapshot_id: the REAL Iceberg snapshot the read was pinned to
+    run_seq, outputs = append_run(
+        spark, ledger, output_dir, result, snap, state.get("table_schema"), cur_schema
     )
-
-    evo = schema_evolution_violations(spark, state.get("table_schema"), cur_schema)
-    outputs = {}
-    for name, out_df in (
-        ("verdicts", result.verdicts),
-        ("violations", result.violations.unionByName(evo)),
-        ("metrics", result.metrics),
-    ):
-        path = os.path.join(output_dir, name)
-        out_df.withColumn("run_seq", F.lit(run_seq)).withColumn(
-            "snapshot_id", F.lit(str(snap))
-        ).write.mode("append").parquet(path)
-        outputs[name] = path
     record_iceberg(
         ledger, int(snap), result.parts_checked, set(todo), outputs,
         table_schema=cur_schema, run_seq=run_seq,
@@ -383,42 +364,14 @@ def record_iceberg(
     (their data is unchanged per the snapshot log) carry forward —
     the iceberg-metadata analogue of ``Ledger.record(carry_fps=...)``.
     """
-    state = ledger.load()
-    if state["snapshot_id"] != snap:
-        keep = [p for p in state["completed_parts"] if p not in planned_parts]
-        state = {
-            "snapshot_id": snap,
-            "completed_parts": keep,
-            # run history, the reserved-seq counter and the schema
-            # baseline all survive snapshot advances (same keep-set as
-            # Ledger.record — dropping next_run_seq here would let a
-            # burned reservation's seq be minted again)
-            **{
-                k: state[k]
-                for k in ("runs", "next_run_seq", "table_schema")
-                if k in state
-            },
-        }
-    state["completed_parts"] = sorted(
-        set(state["completed_parts"]) | set(int(p) for p in validated_parts)
+    with ledger.edit() as state:
+        if state["snapshot_id"] != snap:
+            state["completed_parts"] = [
+                p for p in state["completed_parts"] if p not in planned_parts
+            ]
+            state["snapshot_id"] = snap
+            state.pop("part_fingerprints", None)
+    ledger.record(
+        snap, [int(p) for p in validated_parts], outputs,
+        table_schema=table_schema, run_seq=run_seq,
     )
-    if table_schema is not None:
-        state["table_schema"] = table_schema
-    # same default rule as Ledger.record: never re-mint a seq a
-    # crashed job already burned via reserve_run_seq
-    seq = (
-        max(len(state["runs"]), int(state.get("next_run_seq", 0)))
-        if run_seq is None
-        else int(run_seq)
-    )
-    state["runs"].append(
-        {
-            "ts": time.time(),
-            "run_seq": seq,
-            "snapshot_id": snap,
-            "parts": sorted(int(p) for p in validated_parts),
-            "outputs": outputs,
-        }
-    )
-    state["next_run_seq"] = max(int(state.get("next_run_seq", 0)), seq + 1)
-    ledger.save(state)

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from anomaly_detection_toolkit_spark import versioned as V
 from anomaly_detection_toolkit_spark.plans import checks as C
 from anomaly_detection_toolkit_spark.plans import runner as R
 from anomaly_detection_toolkit_spark.plans.history import (
@@ -515,3 +516,59 @@ def test_compact_sinks_skips_on_concurrent_append(spark, tmp_path):
     assert not os.path.isdir(f"{d}.bak")
     # other sinks compacted normally
     assert done["verdicts"][0] >= 0
+
+
+def test_ledger_read_modify_write_holds_the_lock(tmp_path):
+    """Two jobs on one output dir must never reserve the same run_seq:
+    while another writer holds the ledger's lock, a reservation fails
+    loudly instead of reading a state about to be overwritten."""
+    led = R.Ledger(str(tmp_path / "out" / "_ledger"))
+    assert led.reserve_run_seq() == 0
+    with V.lock(led.dir):
+        with pytest.raises(V.ConcurrentWriteError):
+            led.reserve_run_seq()
+    assert led.reserve_run_seq() == 1  # the failed attempt burned nothing
+
+
+def test_sinks_publish_atomically_and_writers_exclude(spark, tmp_path, monkeypatch):
+    """Sinks are published links from their first append, so even the
+    first compaction is one atomic flip. A second writer raises, and a
+    compaction that dies after writing its version but before
+    publishing leaves the old version served and the lock free; the
+    next compaction sweeps the orphan."""
+    import os
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    images.write_images(spark, src, 200, n_parts=2)
+    suite = [C.UniquenessCheck("image_id", entity_col="image_id")]
+    assert R.run_validation_job(spark, src, out, checks=suite)
+    sinks = ("verdicts", "violations", "metrics")
+    assert all(os.readlink(f"{out}/{s}") == f"{s}.v1" for s in sinks)
+    rows = spark.read.parquet(f"{out}/metrics").count()
+
+    with V.lock(f"{out}/metrics"):
+        with pytest.raises(V.ConcurrentWriteError):
+            R.compact_sinks(spark, out, sinks=("metrics",))
+        before = sorted(os.listdir(f"{out}/verdicts"))
+        with pytest.raises(V.ConcurrentWriteError):  # an append fails before any row
+            R.append_sinks(out, {"verdicts": spark.range(1), "metrics": spark.range(1)})
+        assert sorted(os.listdir(f"{out}/verdicts")) == before
+
+    def crash(path, version):
+        raise RuntimeError("killed before publish")
+
+    monkeypatch.setattr(V, "publish", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        R.compact_sinks(spark, out, sinks=("metrics",))
+    monkeypatch.undo()
+    assert os.readlink(f"{out}/metrics") == "metrics.v1"
+    assert os.path.isdir(f"{out}/metrics.v2")  # the orphan
+    with V.lock(f"{out}/metrics"):  # released despite the crash
+        pass
+    old = V.resolve(f"{out}/metrics")  # a reader mid-read across the flip
+    assert R.compact_sinks(spark, out, sinks=("metrics",))["metrics"][0] == rows
+    assert os.readlink(f"{out}/metrics") == "metrics.v3"
+    assert not os.path.exists(f"{out}/metrics.v2")
+    assert spark.read.parquet(old).count() == rows
+    assert spark.read.parquet(f"{out}/metrics").count() == rows

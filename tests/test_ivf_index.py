@@ -19,6 +19,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from anomaly_detection_toolkit_spark import versioned as V
 from anomaly_detection_toolkit_spark.operators import ivf_index as ivf
 from anomaly_detection_toolkit_spark.operators import similarity as sim
 
@@ -279,3 +280,149 @@ def test_update_without_lineage_refuses(spark, emb, tmp_path):
     ivf.build_ivf_index(emb, path, n_cells=4)  # no src_part_col
     with pytest.raises(ValueError, match="src_part_col"):
         ivf.update_ivf_index(spark, path, emb)
+
+
+def _answer(df):
+    return sorted(
+        (r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 6), r["rank"])
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("writer", ["update", "rebuild"])
+def test_query_racing_a_publish_reads_one_whole_version(
+    spark, emb, tmp_path, monkeypatch, writer
+):
+    """A writer publishes between the query's resolve and its reads
+    (the racing point that used to mix versions): the query still
+    returns the full old answer, and the next query the full new one —
+    for an update, and for a rebuild with a different n_cells."""
+    v2 = emb.withColumn("part", (F.col("vec_id") % 4).cast("int"))
+    v1 = v2.filter(F.col("part") != 2)
+    path = str(tmp_path / "idx")
+    ivf.build_ivf_index(v1, path, n_cells=4, src_part_col="part")
+    queries = v2.filter(F.col("vec_id") < 8)
+
+    def query():
+        return _answer(ivf.ivf_query(spark, path, queries, k=5, n_probe=2))
+
+    def publish_new_version():
+        if writer == "update":
+            ivf.update_ivf_index(spark, path, v2.filter(F.col("part") == 2))
+        else:
+            ivf.build_ivf_index(v2, path, n_cells=8, src_part_col="part")
+
+    old = query()
+    real = V.resolve
+
+    def resolve_then_race(p):
+        ver = real(p)
+        monkeypatch.setattr(V, "resolve", real)
+        publish_new_version()
+        return ver
+
+    monkeypatch.setattr(V, "resolve", resolve_then_race)
+    assert query() == old
+    new = query()
+    assert new != old and len(new) == len(old)
+
+
+def test_second_writer_raises_and_crashed_writer_leaves_old_version(
+    spark, emb, tmp_path, monkeypatch
+):
+    v = emb.withColumn("part", (F.col("vec_id") % 2).cast("int"))
+    path = str(tmp_path / "idx")
+    cells = os.path.join(path, "cells")
+    ivf.build_ivf_index(v, path, n_cells=4, src_part_col="part")
+    n = v.count()
+    with V.lock(cells):
+        with pytest.raises(V.ConcurrentWriteError):
+            ivf.update_ivf_index(spark, path, v.filter(F.col("part") == 1))
+
+    def crash(path, version):
+        raise RuntimeError("killed before publish")
+
+    monkeypatch.setattr(V, "publish", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        ivf.update_ivf_index(spark, path, v.filter(F.col("part") == 1))
+    monkeypatch.undo()
+    assert os.readlink(cells) == "cells.v1"
+    assert os.path.isdir(cells + ".v2")  # written, never published
+    assert spark.read.parquet(cells).count() == n
+    with V.lock(cells):  # released despite the crash
+        pass
+    ivf.update_ivf_index(spark, path, v.filter(F.col("part") == 1))
+    assert os.readlink(cells) == "cells.v3"
+    assert sorted(glob.glob(cells + ".v*")) == [cells + ".v1", cells + ".v3"]
+    assert spark.read.parquet(cells).count() == n
+
+
+@pytest.mark.parametrize("bad", ["NULL", "'x'"])
+def test_build_rejects_bad_lineage(spark, emb, tmp_path, bad):
+    """NULL or non-int lineage would land in __HIVE_DEFAULT_PARTITION__,
+    which no update can ever refresh: the build refuses before
+    publishing and the previous index keeps being served."""
+    path = str(tmp_path / "idx")
+    good = emb.withColumn("part", (F.col("vec_id") % 2).cast("string"))
+    ivf.build_ivf_index(good, path, n_cells=4, src_part_col="part")
+    broken = good.withColumn(
+        "part", F.when(F.col("vec_id") == 3, F.expr(bad)).otherwise(F.col("part"))
+    )
+    with pytest.raises(ValueError, match="1 rows with NULL"):
+        ivf.build_ivf_index(broken, path, n_cells=8, src_part_col="part")
+    man, _ = ivf.load_ivf_manifest(path)
+    assert man["n_cells"] == 4
+    assert glob.glob(os.path.join(path, "cells.v*")) == [
+        os.path.join(path, "cells.v1")
+    ]
+
+
+def test_entry_index_cache_waits_for_the_winning_builder(
+    spark, emb, tmp_path, monkeypatch
+):
+    """Two processes miss the shared entry-cache index at once. The
+    loser of the build race (here: the winner holds the lock from a
+    thread) waits for the winner's publish and serves that index."""
+    import shutil
+    import tempfile
+    import threading
+
+    from anomaly_detection_toolkit_spark import entry_corpus as ec
+
+    winner_src = str(tmp_path / "built")
+    ivf.build_ivf_index(emb, winner_src, n_cells=ec._IVF_CELLS, seed=ec._IVF_SEED)
+    (tmp_path / "cache").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "cache"))
+    monkeypatch.setattr(ec, "_IVF_INDEX_CACHE", {})
+    held, loser_waits = threading.Event(), threading.Event()
+    winner = []
+
+    def win(cells):
+        with V.new_version(cells) as ver:
+            held.set()
+            assert loser_waits.wait(60)
+            shutil.copytree(V.resolve(os.path.join(winner_src, "cells")), ver)
+            V.publish(cells, ver)
+
+    real_published, real_lock = V.published, V.lock
+
+    def first_look_starts_the_winner(cells):
+        if not winner:
+            winner.append(threading.Thread(target=win, args=(cells,)))
+            winner[0].start()
+            assert held.wait(60)
+        return real_published(cells)
+
+    def lock_spy(path, wait=False):
+        if wait:
+            loser_waits.set()
+        return real_lock(path, wait)
+
+    monkeypatch.setattr(V, "published", first_look_starts_the_winner)
+    monkeypatch.setattr(V, "lock", lock_spy)
+    path = ec._ivf_index_for(spark, SF_UNIT)
+    winner[0].join(60)
+    assert not winner[0].is_alive() and loser_waits.is_set()
+    assert os.readlink(os.path.join(path, "cells")) == "cells.v1"
+    man, cent = ivf.load_ivf_manifest(path)
+    assert man["n_cells"] == ec._IVF_CELLS and cent.shape[0] == ec._IVF_CELLS

@@ -138,10 +138,9 @@ def main(argv: list[str] | None = None) -> int:
         help="after the run, rewrite each append-mode sink as one "
         "parquet file (years of appended runs = small-files problem; "
         "the sinks are tiny in bytes). Parquet-dir sinks only — on "
-        "Iceberg use rewrite_data_files. The swap is atomic (symlink "
-        "flip) except the very first compaction of a sink, which has "
-        "a two-syscall window where the path is absent; sinks a "
-        "concurrent run appends to mid-compaction are skipped",
+        "Iceberg use rewrite_data_files. Each sink is published with "
+        "one atomic link flip; a concurrent run's append fails loudly "
+        "instead of landing mid-compaction",
     )
     ap.add_argument(
         "--violations-cap",
@@ -230,10 +229,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.quarantine:
         import os
 
-        from pyspark.sql import functions as F
-
         from anomaly_detection_toolkit_spark.plans.runner import (
             Ledger,
+            append_sinks,
             quarantine_ids,
         )
 
@@ -244,10 +242,10 @@ def main(argv: list[str] | None = None) -> int:
         # not the whole dir
         last = Ledger(os.path.join(args.output, "_ledger")).load()["runs"][-1]
         qpath = os.path.join(args.output, "quarantine_ids")
-        ids = quarantine_ids(result.violations).withColumn(
-            "run_seq", F.lit(int(last["run_seq"]))
-        ).withColumn("snapshot_id", F.lit(str(last["snapshot_id"])))
-        ids.write.mode("append").parquet(qpath)
+        ids = quarantine_ids(result.violations)
+        append_sinks(
+            args.output, {"quarantine_ids": ids}, int(last["run_seq"]), str(last["snapshot_id"])
+        )
         print(
             f"quarantine: {ids.count()} entity ids "
             f"(run_seq={last['run_seq']}) -> {qpath}"
@@ -273,6 +271,7 @@ def _write_clean_output(spark, args) -> None:
     rows are compacted/pruned."""
     import os
 
+    from anomaly_detection_toolkit_spark import versioned
     from anomaly_detection_toolkit_spark.plans.runner import clean_table
 
     if args.violations_cap is not None:
@@ -290,7 +289,9 @@ def _write_clean_output(spark, args) -> None:
         src = spark.read.parquet(args.input)
     vpath = os.path.join(args.output, "violations")
     if os.path.isdir(vpath):
-        all_viol = spark.read.option("mergeSchema", "true").parquet(vpath)
+        all_viol = spark.read.option("mergeSchema", "true").parquet(
+            versioned.resolve(vpath)
+        )
         cleaned = clean_table(src, all_viol, entity_col=args.clean_entity_col)
     else:  # no violations ever recorded: everything passes
         cleaned = src
@@ -334,14 +335,17 @@ def _run_history_drift(spark, args) -> None:
 
     from pyspark.sql import functions as F
 
+    from anomaly_detection_toolkit_spark import versioned
     from anomaly_detection_toolkit_spark.plans.history import (
         history_drift,
         history_violations,
+        restrict_to_recorded_runs,
     )
+    from anomaly_detection_toolkit_spark.plans.runner import Ledger, append_sinks
 
     metrics = (
         spark.read.option("mergeSchema", "true")
-        .parquet(os.path.join(args.output, "metrics"))
+        .parquet(versioned.resolve(os.path.join(args.output, "metrics")))
     )
     if "run_seq" not in metrics.columns:
         print("history-drift: metrics sink has no run_seq lineage yet")
@@ -350,16 +354,8 @@ def _run_history_drift(spark, args) -> None:
     # the ledger never recorded — those partial-run rows must not
     # count as a full run in every future baseline (see
     # plans.history.restrict_to_recorded_runs)
-    from anomaly_detection_toolkit_spark.plans.history import (
-        restrict_to_recorded_runs,
-    )
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger as _L
-
-    recorded = {
-        int(r["run_seq"])
-        for r in _L(os.path.join(args.output, "_ledger")).load().get("runs", [])
-        if r.get("run_seq") is not None
-    }
+    runs = Ledger(os.path.join(args.output, "_ledger")).load().get("runs", [])
+    recorded = {int(r["run_seq"]) for r in runs if r.get("run_seq") is not None}
     metrics = restrict_to_recorded_runs(metrics, recorded)
     n_runs = metrics.select("run_seq").where(F.col("run_seq").isNotNull()).distinct().count()
     if n_runs < 2:
@@ -377,7 +373,7 @@ def _run_history_drift(spark, args) -> None:
             else None
         ),
     ).persist()
-    scored.write.mode("append").parquet(os.path.join(args.output, "history_drift"))
+    append_sinks(args.output, {"history_drift": scored})
     # flagged cells ALSO land in the main violations sink (tagged with
     # the scored run's lineage) so one consumer sees every finding —
     # report.py's newest-run section includes them alongside the
@@ -387,22 +383,15 @@ def _run_history_drift(spark, args) -> None:
         print("history-drift: no scorable cells")
         scored.unpersist()
         return
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger
-
-    runs = Ledger(os.path.join(args.output, "_ledger")).load().get("runs", [])
     snap_id = next(
         (str(r["snapshot_id"]) for r in reversed(runs)
          if int(r.get("run_seq", -1)) == int(cur)),
         None,
     )
-    viol = (
-        history_violations(scored)
-        .withColumn("run_seq", F.lit(int(cur)))
-        .withColumn("snapshot_id", F.lit(snap_id).cast("string"))
-    )
+    viol = history_violations(scored)
     flagged = viol.collect()
     if flagged:  # don't append an empty file set on calm runs
-        viol.write.mode("append").parquet(os.path.join(args.output, "violations"))
+        append_sinks(args.output, {"violations": viol}, int(cur), snap_id)
     print(
         f"history-drift: scored {scored.count()} cells vs history, "
         f"{len(flagged)} drifted"
