@@ -471,7 +471,14 @@ def append_sinks(
     """Append each frame to sink ``<output_dir>/<name>`` (tagged with
     the run's lineage when ``run_seq`` is given); returns the paths.
     All sink locks are taken before the first write, so a concurrent
-    compaction fails this call before any row lands."""
+    compaction fails this call before any row lands.
+
+    Each frame is written through a ``REBALANCE`` hint: AQE sizes the
+    write partitions from the bytes actually produced, so a tiny
+    aggregated sink lands as one file per append (not one per upstream
+    check partition) while a huge uncapped violations set still writes
+    in parallel. ``coalesce(1)`` would instead fold the upstream stage
+    into a single task, and a fixed count fits only one data size."""
     with ExitStack() as stack:
         dirs = {
             name: stack.enter_context(
@@ -484,7 +491,7 @@ def append_sinks(
                 df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
                     "snapshot_id", F.lit(snapshot_id).cast("string")
                 )
-            df.write.mode("append").parquet(dirs[name])
+            df.hint("rebalance").write.mode("append").parquet(dirs[name])
     return {name: os.path.join(output_dir, name) for name in frames}
 
 
@@ -521,6 +528,10 @@ def append_run(
     return run_seq, outputs
 
 
+class UnversionedSinkError(RuntimeError):
+    """A sink is a plain directory, not a ``versioned`` published link."""
+
+
 def compact_sinks(
     spark: SparkSession,
     output_dir: str,
@@ -536,17 +547,19 @@ def compact_sinks(
 ) -> dict[str, tuple[int, int]]:
     """Rewrite each append-mode sink as ``target_files`` parquet files.
 
-    Every validation run appends a fresh file set to each sink; years
-    of daily runs on a 10^6-partition table turn the TINY aggregated
-    sinks into a classic small-files problem (listing + footer reads
-    dominate). The sinks stay small in BYTES, so compaction is a
-    single read→write of each (with ``mergeSchema`` so pre-lineage
-    rows keep their NULL ``run_seq``) into a new sink version,
-    verified by row count and published with one atomic flip
-    (``versioned``). On Iceberg-backed sinks use the catalog's
-    ``rewrite_data_files`` instead.
+    Every validation run appends one file set to each sink, sized by
+    AQE (one file for a tiny sink; see ``append_sinks``); years of
+    daily runs still pile up one set per run, a classic small-files
+    problem (listing + footer reads dominate). The sinks stay small in
+    BYTES, so compaction is a single read→write of each (with
+    ``mergeSchema`` so pre-lineage rows keep their NULL ``run_seq``)
+    into a new sink version, verified by row count and published with
+    one atomic flip (``versioned``). On Iceberg-backed sinks use the
+    catalog's ``rewrite_data_files`` instead.
 
-    A concurrent compaction or ``append_sinks`` raises
+    A sink written before the versioned layout (a plain directory, not
+    a published link) raises ``UnversionedSinkError`` before any sink
+    is compacted. A concurrent compaction or ``append_sinks`` raises
     ``versioned.ConcurrentWriteError``; a writer that bypasses the
     lock and changes the listing after the read makes the sink skip
     (entry ``(-1, files_now)``).
@@ -566,11 +579,18 @@ def compact_sinks(
             if f.endswith(".parquet")
         }
 
+    paths = {s: os.path.join(output_dir, s) for s in sinks}
+    paths = {s: p for s, p in paths.items() if os.path.isdir(p)}
+    for sink, path in paths.items():
+        if not versioned.published(path):
+            raise UnversionedSinkError(
+                f"sink {sink!r} at {path} is a plain directory written before "
+                "the versioned layout, so it cannot be compacted. Make it a "
+                f"published version first: `mv {path} {path}.v1 && "
+                f"ln -s {sink}.v1 {path}`, or validate into a fresh output dir."
+            )
     done: dict[str, tuple[int, int]] = {}
-    for sink in sinks:
-        path = os.path.join(output_dir, sink)
-        if not os.path.isdir(path):
-            continue
+    for sink, path in paths.items():
         with versioned.new_version(path) as new:
             cur = versioned.resolve(path)
             files_before = _listing(cur)

@@ -70,6 +70,14 @@ def get_spark(
         # 100k-image bench table. 2048-row batches keep cache-build
         # memory per task in the tens of MB for payload tables.
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "2048")
+        # A default-suite validation run generates ~200 distinct
+        # whole-stage-codegen classes; the JVM-wide codegen cache is an
+        # LRU of 100 by default, so a repeat run cycles through it with
+        # 0 hits and recompiles ~199 classes with Janino every time.
+        # 1000 entries hold several suite runs, so a long-lived
+        # session compiles each class once.
+        # Static conf: it must be set before the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # see _default_driver_mem for the measured 24g cap rationale;
         # submit conf / the env var overrides either way.
         .config(

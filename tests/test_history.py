@@ -272,6 +272,7 @@ def test_clean_table_broadcasts_the_id_side(spark, tmp_path):
 def test_report_tool_renders_run_history(spark, tmp_path):
     """tools/report.py reads only the tiny sinks + ledger (no Spark)
     and renders per-run verdict trends."""
+    import os
     import shutil
     import subprocess
     import sys
@@ -298,6 +299,19 @@ def test_report_tool_renders_run_history(spark, tmp_path):
     assert "== ledger ==" in res.stdout and "runs 2" in res.stdout
     # schema map was recorded by the second run
     assert "schema cols 0" not in res.stdout
+    # one line per sink: its published version's files (one per run)
+    # and bytes, as the listing has them
+    sinks = res.stdout.split("== sinks ==\n")[1].split("== ledger")[0]
+    listed = {line.split()[0]: line.split() for line in sinks.splitlines()}
+    assert set(listed) == {"verdicts", "violations", "metrics"}
+    for name, (_, version, _, n_files, _, n_bytes) in listed.items():
+        real = os.path.realpath(f"{out}/{name}")
+        assert version == os.path.basename(real) == f"{name}.v1"
+        sizes = [
+            os.path.getsize(f"{real}/{f}")
+            for f in os.listdir(real) if f.endswith(".parquet")
+        ]
+        assert (int(n_files), int(n_bytes)) == (2, sum(sizes)), name
 
 
 def test_reserved_run_seq_never_reused_after_crash(spark, tmp_path):
@@ -518,6 +532,30 @@ def test_compact_sinks_skips_on_concurrent_append(spark, tmp_path):
     assert done["verdicts"][0] >= 0
 
 
+def test_compact_sinks_rejects_plain_directory_sink(spark, tmp_path):
+    """A sink written before the versioned layout (a plain directory)
+    fails compaction up front with a named error naming the sink and
+    the remedy: no sink is compacted and no version is left behind.
+    After the remedy the same output dir compacts."""
+    import os
+
+    out = str(tmp_path / "out")
+    R.append_sinks(out, {"verdicts": spark.range(3)})
+    spark.range(5).write.parquet(f"{out}/metrics")  # the old layout
+
+    with pytest.raises(R.UnversionedSinkError, match="'metrics'") as err:
+        R.compact_sinks(spark, out)
+    assert f"ln -s metrics.v1 {out}/metrics" in str(err.value)
+    assert not any(f.startswith("metrics.v") for f in os.listdir(out))
+    assert os.readlink(f"{out}/verdicts") == "verdicts.v1"
+    assert not os.path.exists(f"{out}/verdicts.v2")
+
+    os.rename(f"{out}/metrics", f"{out}/metrics.v1")
+    os.symlink("metrics.v1", f"{out}/metrics")
+    done = R.compact_sinks(spark, out)
+    assert done["verdicts"][0] == 3 and done["metrics"][0] == 5
+
+
 def test_ledger_read_modify_write_holds_the_lock(tmp_path):
     """Two jobs on one output dir must never reserve the same run_seq:
     while another writer holds the ledger's lock, a reservation fails
@@ -532,19 +570,30 @@ def test_ledger_read_modify_write_holds_the_lock(tmp_path):
 
 def test_sinks_publish_atomically_and_writers_exclude(spark, tmp_path, monkeypatch):
     """Sinks are published links from their first append, so even the
-    first compaction is one atomic flip. A second writer raises, and a
-    compaction that dies after writing its version but before
-    publishing leaves the old version served and the lock free; the
-    next compaction sweeps the orphan."""
+    first compaction is one atomic flip. Each append is one file per
+    tiny sink, holding exactly the rows the run reported. A second
+    writer raises, and a compaction that dies after writing its
+    version but before publishing leaves the old version served and
+    the lock free; the next compaction sweeps the orphan."""
     import os
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     images.write_images(spark, src, 200, n_parts=2)
     suite = [C.UniquenessCheck("image_id", entity_col="image_id")]
-    assert R.run_validation_job(spark, src, out, checks=suite)
+    res = R.run_validation_job(spark, src, out, checks=suite)
+    assert res
     sinks = ("verdicts", "violations", "metrics")
     assert all(os.readlink(f"{out}/{s}") == f"{s}.v1" for s in sinks)
+    for s in sinks:
+        files = [f for f in os.listdir(f"{out}/{s}") if f.endswith(".parquet")]
+        assert len(files) == 1, (s, files)
+        reported = getattr(res, s)
+        written = spark.read.parquet(f"{out}/{s}").select(*reported.columns)
+        assert sorted(map(str, written.collect())) == sorted(
+            map(str, reported.collect())
+        ), s
+    assert res.violations.count() > 0
     rows = spark.read.parquet(f"{out}/metrics").count()
 
     with V.lock(f"{out}/metrics"):

@@ -415,3 +415,27 @@ def test_clean_table_auto_switches_join(spark):
     out_b = R.clean_table(fact, bad.limit(5), entity_col="image_id", broadcast=True)
     out_b.collect()
     assert "BroadcastExchange" in out_b._jdf.queryExecution().executedPlan().toString()
+
+
+def test_repeat_validation_run_reuses_generated_code(spark, tmp_path):
+    """A second plan-identical validation run in one session must find
+    its whole-stage-codegen classes in the codegen cache. A default
+    suite run generates ~200 classes; at Spark's default cache size
+    (100, an LRU) the repeat run cycled through it with no hit and
+    recompiled ~199 of them. The slack covers AQE picking a different
+    join for a few stages."""
+    from anomaly_detection_toolkit_spark.plans.runner import run_validation_job
+    from anomaly_detection_toolkit_spark.sources import images
+
+    src = str(tmp_path / "imgs")
+    images.write_images(spark, src, 300, n_parts=3)
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    # two fresh output dirs: both runs get run_seq 0, so their plans
+    # (sink lineage literals included) are identical
+    run_validation_job(spark, src, str(tmp_path / "out1")).unpersist(blocking=True)
+    before = compiles.getCount()
+    run_validation_job(spark, src, str(tmp_path / "out2")).unpersist(blocking=True)
+    assert compiles.getCount() - before <= 10

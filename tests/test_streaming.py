@@ -357,6 +357,59 @@ def test_escalation_event_time_ttl_evicts_dead_asset(spark, tmp_path):
     assert m9 == [1, 2]
 
 
+class _FakeGroupState:
+    """The slice of ``GroupState`` that ``_escalate_group`` uses."""
+
+    hasTimedOut = False
+
+    def __init__(self, prior=None, watermark_ms=50_000):
+        self.exists = prior is not None
+        self.get = prior
+        self.wm = watermark_ms
+        self.timeout_ms = None
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+    def getCurrentWatermarkMs(self):
+        return self.wm
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
+def test_escalation_event_time_ttl_ignores_all_nat_batch():
+    """A batch whose alerts all lack an event time has no newest alert
+    time (NaT, whose ns value is INT64_MIN): the key keeps its prior
+    max_ts, and a key that never saw an event time counts its TTL from
+    the current watermark, instead of timing out at the next
+    watermark advance."""
+    import pandas as pd
+
+    from anomaly_detection_toolkit_spark.streaming.escalation import _escalate_group
+
+    def batch():
+        return [pd.DataFrame({
+            "_event_time": pd.Series([pd.NaT, pd.NaT], dtype="datetime64[ns]"),
+            "value": [55.0, 60.0], "raw_level": ["warning", "warning"],
+            "threshold": [50.0, 50.0], "message": ["m", "m"],
+        })]
+
+    def run(state):
+        out = next(_escalate_group(("M1", "temp"), batch(), state, {}, 10_000, True))
+        return list(out["key_count"])
+
+    known = _FakeGroupState(prior=(3, 100.0))
+    assert run(known) == [5, 5]
+    assert known.get == (5, 100.0)
+    assert known.timeout_ms == 100_000 + 10_000
+
+    new = _FakeGroupState()
+    assert run(new) == [2, 2]
+    assert new.get == (2, float("-inf"))
+    assert new.timeout_ms == 50_000 + 10_000
+
+
 def test_escalation_ttl_eviction_requires_ts_and_ttl(spark):
     from anomaly_detection_toolkit_spark.streaming.escalation import (
         streaming_check_thresholds,

@@ -14,8 +14,12 @@ import argparse
 import json
 import os
 import sys
+from pathlib import Path
 
 import duckdb
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from anomaly_detection_toolkit_spark import versioned  # noqa: E402
 
 
 def _rel(con: duckdb.DuckDBPyConnection, path: str, name: str) -> bool:
@@ -26,6 +30,27 @@ def _rel(con: duckdb.DuckDBPyConnection, path: str, name: str) -> bool:
         f"read_parquet('{path}/*.parquet', union_by_name=true)"
     )
     return True
+
+
+def _sink_files(out: str) -> list[tuple[str, str, int, int]]:
+    """(sink, version dir, parquet files, bytes) of the version each
+    sink publishes now — from the listing alone, so an operator sees
+    when ``compact_sinks`` is due. A plain-directory sink (written
+    before the versioned layout) is its own version."""
+    rows = []
+    for name in sorted(os.listdir(out)):
+        path = os.path.join(out, name)
+        if name.startswith("_") or "." in name or not os.path.isdir(path):
+            continue
+        real = versioned.resolve(path)
+        sizes = [
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(real)
+            for f in files
+            if f.endswith(".parquet")
+        ]
+        rows.append((name, os.path.basename(real), len(sizes), sum(sizes)))
+    return rows
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -124,6 +149,10 @@ def main(argv: list[str] | None = None) -> int:
                 f"  {check}/{metric} part={part} value={value:g} "
                 f"z={z:+.2f} (n={hist_n})"
             )
+
+    print("== sinks ==")
+    for sink, version, n_files, n_bytes in _sink_files(out):
+        print(f"  {sink:<16} {version:<20} files {n_files:>5}  bytes {n_bytes:>12}")
 
     ledger_path = f"{out}/_ledger/ledger.json"
     if os.path.exists(ledger_path):
