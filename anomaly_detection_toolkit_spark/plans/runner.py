@@ -471,14 +471,7 @@ def append_sinks(
     """Append each frame to sink ``<output_dir>/<name>`` (tagged with
     the run's lineage when ``run_seq`` is given); returns the paths.
     All sink locks are taken before the first write, so a concurrent
-    compaction fails this call before any row lands.
-
-    Each frame is written through a ``REBALANCE`` hint: AQE sizes the
-    write partitions from the bytes actually produced, so a tiny
-    aggregated sink lands as one file per append (not one per upstream
-    check partition) while a huge uncapped violations set still writes
-    in parallel. ``coalesce(1)`` would instead fold the upstream stage
-    into a single task, and a fixed count fits only one data size."""
+    compaction fails this call before any row lands."""
     with ExitStack() as stack:
         dirs = {
             name: stack.enter_context(
@@ -491,7 +484,7 @@ def append_sinks(
                 df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
                     "snapshot_id", F.lit(snapshot_id).cast("string")
                 )
-            df.hint("rebalance").write.mode("append").parquet(dirs[name])
+            df.write.mode("append").parquet(dirs[name])
     return {name: os.path.join(output_dir, name) for name in frames}
 
 
@@ -520,7 +513,13 @@ def append_run(
         {
             "verdicts": result.verdicts,
             "violations": result.violations.unionByName(evo),
-            "metrics": result.metrics,
+            # a union of tiny per-check aggregates: one file per check
+            # partition (28 per default-suite run) unless REBALANCE
+            # lets AQE size the write from the bytes. Verdicts come
+            # out of an AQE-sized shuffle already; a rebalanced dense
+            # violations set wrote 3x the bytes with ~45% more CPU
+            # (docs/SCALE.md).
+            "metrics": result.metrics.hint("rebalance"),
         },
         run_seq,
         str(snap),
@@ -547,11 +546,11 @@ def compact_sinks(
 ) -> dict[str, tuple[int, int]]:
     """Rewrite each append-mode sink as ``target_files`` parquet files.
 
-    Every validation run appends one file set to each sink, sized by
-    AQE (one file for a tiny sink; see ``append_sinks``); years of
-    daily runs still pile up one set per run, a classic small-files
-    problem (listing + footer reads dominate). The sinks stay small in
-    BYTES, so compaction is a single read→write of each (with
+    Every validation run appends a file set to each sink (one file for
+    verdicts and metrics; see ``append_run``); years of daily runs
+    pile up one set per run, a classic small-files problem (listing +
+    footer reads dominate). The sinks stay small in BYTES, so
+    compaction is a single read→write of each (with
     ``mergeSchema`` so pre-lineage rows keep their NULL ``run_seq``)
     into a new sink version, verified by row count and published with
     one atomic flip (``versioned``). On Iceberg-backed sinks use the

@@ -73,16 +73,18 @@ def _escalate_group(
     count += len(rows)  # all increments land before any escalation
     if event_time:
         # _event_time arrives as datetime64[ns]; keep seconds like
-        # sliding_buffer's max_ts. An all-NaT batch has no max (NaT's
-        # .value is INT64_MIN): it keeps the prior max_ts.
+        # sliding_buffer's max_ts. An all-NaT batch has no max; NaT's
+        # .value is INT64_MIN, which would become the max_ts of a key
+        # that has not yet seen an event time.
         batch_max = rows["_event_time"].max()
         if not pd.isna(batch_max):
             max_ts = max(max_ts, batch_max.value / 1e9)
         state.update((count, max_ts))
         # evict once the GLOBAL watermark passes (newest alert + TTL);
         # clamped above the current watermark — Spark rejects
-        # timeouts at/behind it. A key that never saw an event time
-        # counts its TTL from the current watermark.
+        # timeouts at/behind it. A key that has never seen an event
+        # time counts its TTL from the current watermark instead of
+        # timing out at the next watermark advance.
         wm_ms = state.getCurrentWatermarkMs()
         newest_ms = int(max_ts * 1000) if max_ts > float("-inf") else wm_ms
         state.setTimeoutTimestamp(max(newest_ms + ttl_ms, wm_ms + 1))

@@ -380,10 +380,12 @@ class _FakeGroupState:
 
 def test_escalation_event_time_ttl_ignores_all_nat_batch():
     """A batch whose alerts all lack an event time has no newest alert
-    time (NaT, whose ns value is INT64_MIN): the key keeps its prior
-    max_ts, and a key that never saw an event time counts its TTL from
-    the current watermark, instead of timing out at the next
-    watermark advance."""
+    time (NaT, whose ns value is INT64_MIN). A key that has never seen
+    an event time counts its TTL from the current watermark instead of
+    timing out at the next watermark advance (the ``new`` half; it
+    failed before the NaT guard). A key with state keeps its max_ts
+    (the ``known`` half, which held before too: max() already ignored
+    INT64_MIN next to a real max_ts)."""
     import pandas as pd
 
     from anomaly_detection_toolkit_spark.streaming.escalation import _escalate_group

@@ -14,12 +14,8 @@ import argparse
 import json
 import os
 import sys
-from pathlib import Path
 
 import duckdb
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-from anomaly_detection_toolkit_spark import versioned  # noqa: E402
 
 
 def _rel(con: duckdb.DuckDBPyConnection, path: str, name: str) -> bool:
@@ -42,7 +38,7 @@ def _sink_files(out: str) -> list[tuple[str, str, int, int]]:
         path = os.path.join(out, name)
         if name.startswith("_") or "." in name or not os.path.isdir(path):
             continue
-        real = versioned.resolve(path)
+        real = os.path.realpath(path)
         sizes = [
             os.path.getsize(os.path.join(root, f))
             for root, _, files in os.walk(real)
