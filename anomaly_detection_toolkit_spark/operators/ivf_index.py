@@ -1,14 +1,14 @@
 """Persisted IVF (inverted-file) ANN index — build/query split.
 
-Why this exists: the one-shot ``similarity.ivf_topk`` recomputes cell
-assignment over the FULL corpus on every call, so at 1M vectors its
-wall time equals brute force (round-4 ``BENCH/ANN_RECALL.md``: 32.5s
-IVF vs 31.2s brute) and at 10^10 vectors the O(N·n_cells) assignment
-matmul per query batch is the scale-killer. The index pays the
-corpus-sized cost ONCE:
+Why this exists: IVF retrieval needs every corpus vector's cell, an
+O(N·n_cells) assignment matmul. Recomputed per query batch, that pass
+alone costs as much as brute force at 1M vectors (round-4
+``BENCH/ANN_RECALL.md``: 32.5s vs 31.2s brute) and is the
+scale-killer at 10^10 vectors. The index pays the corpus-sized cost
+ONCE:
 
-- ``build_ivf_index``: deterministic k-means fit (the same replayable
-  Lloyd as ``ivf_topk`` — ``similarity.fit_kmeans_arrays``), one
+- ``build_ivf_index``: deterministic k-means fit (the replayable
+  Lloyd of ``similarity.fit_kmeans_arrays``), one
   Arrow-batched assignment pass over the corpus, written as a
   CELL-PARTITIONED parquet inverted file (hive layout
   ``cells/cell=<c>/src_part=<p>/``) with per-row norms precomputed;
@@ -49,8 +49,10 @@ config only; centroids live in parquet via pyarrow (no Spark job, no
 pickled-RDD round trip — CLAUDE.md).
 
 Reference parity: the reference toolkit has no ANN index (this is
-engine surface beyond it); the cell-assignment/probe math is shared
-with ``similarity.ivf_topk``, whose DuckDB oracle re-derives it.
+engine surface beyond it). The gate pair ``ann_ivf_topk_embeddings``
+runs ``build_ivf_index`` + ``ivf_query`` itself; its DuckDB oracle
+(``entry_corpus._ivf_oracle_sql``) refits the same centroids and
+re-derives assignment, probes and rerank in SQL.
 """
 
 from __future__ import annotations
@@ -204,15 +206,16 @@ def load_ivf_manifest(index_path: str) -> tuple[dict, np.ndarray]:
 
 
 def read_probed_cells(
-    spark: SparkSession, index_path: str, cells: list[int]
+    spark: SparkSession, ver: str, cells: list[int]
 ) -> DataFrame:
-    """Inverted-file rows of exactly the given cells. The ``isin`` on
+    """Inverted-file rows of exactly the given cells of the index
+    version dir ``ver`` (as ``_open`` resolved it). The ``isin`` on
     the hive partition column becomes a PartitionFilter in the scan:
     only the probed cell directories are listed/read — this is the
     partition-pruning contract the plan test pins."""
-    return spark.read.parquet(
-        versioned.resolve(os.path.join(index_path, CELLS))
-    ).filter(F.col("cell").isin([int(c) for c in cells]))
+    return spark.read.parquet(ver).filter(
+        F.col("cell").isin([int(c) for c in cells])
+    )
 
 
 def ivf_query(
@@ -252,7 +255,7 @@ def ivf_query(
     probe_cells = sorted(
         r["cell"] for r in q.select("cell").distinct().collect()
     )
-    c = spark.read.parquet(ver).filter(F.col("cell").isin(probe_cells)).select(
+    c = read_probed_cells(spark, ver, probe_cells).select(
         F.col(manifest["id_col"]).alias("neighbor_id"),
         F.col(manifest["vec_col"]).alias("cv"),
         F.col("nrm").alias("cn"),

@@ -21,8 +21,11 @@ Two paths, mirroring production vector-search tiers:
 
 For generic top-k RETRIEVAL at 10^6+ vectors the default is the
 persisted IVF inverted file (``operators/ivf_index`` — build once,
-partition-pruned probes); the one-shot ``ivf_topk`` here shares its
-assignment math and serves as its oracle-gated correctness twin.
+partition-pruned probes). Its sample, k-means fit and cell
+assignment are defined here (``collect_vector_sample``,
+``fit_kmeans_arrays``, ``ivf_cell_udfs``): the DuckDB oracle of the
+``ann_ivf_topk_embeddings`` gate pair calls the same fit and
+re-derives the sample order and the assignment in SQL.
 
 Hyperplanes are derived from the cross-engine md5 hash (same trick
 as dedup.py) so DuckDB oracles reproduce buckets exactly: plane p,
@@ -282,10 +285,11 @@ def lsh_topk(
     single-table recall@10 at 0.16 vs 0.59 for 4 tables at auto plane
     sizing — constant-bucket SRP fundamentally trades generic-kNN
     recall for scan cost as N grows. For generic top-k at 10^6+
-    vectors prefer ``ivf_topk``: measured recall@10 = 1.0 at
-    ``n_probe=1`` with ~N/1000 cells on clustered data. SRP-LSH
-    remains the right shape for HIGH-similarity retrieval (near-dup:
-    collision probability (1−θ/π)^planes → 1 as θ → 0)."""
+    vectors prefer the persisted IVF index (``ivf_index.ivf_query``):
+    measured recall@10 = 1.0 at ``n_probe=1`` with ~N/1000 cells on
+    clustered data. SRP-LSH remains the right shape for HIGH-similarity
+    retrieval (near-dup: collision probability (1−θ/π)^planes → 1 as
+    θ → 0)."""
     if n_planes is None:
         n = n_rows_hint if n_rows_hint is not None else corpus.count()
         n_planes = auto_n_planes(n, target_bucket_rows)
@@ -403,9 +407,9 @@ def fit_kmeans_arrays(
 
 def ivf_cell_udfs(cent: np.ndarray, n_probe: int):
     """``(cell_of, probe_of)`` pandas UDFs with the centroid matrix in
-    closure — shared by the one-shot ``ivf_topk`` and the persisted
-    ``operators.ivf_index`` build/query paths so cell-assignment
-    semantics stay bit-identical with the DuckDB oracle.
+    closure — used by the ``operators.ivf_index`` build, update and
+    query paths; cell-assignment semantics stay bit-identical with
+    the DuckDB oracle.
 
     Cell scores are rounded to 6dp before argmax/argsort (matching
     the oracle's ORDER BY round(score,6) DESC, c): BLAS summation
@@ -444,67 +448,6 @@ def topk_rerank(scored: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
     )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_fit_rows: int = 100_000,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the coarse-quantizer
-    scale path alongside SRP-LSH: corpus vectors are bucketed by
-    nearest k-means centroid (one Arrow-batched matmul per batch, no
-    per-row Python), each query probes its ``n_probe`` nearest cells,
-    and the exact cosine rerank runs only on the probed cells'
-    members (~n_probe/n_cells of the corpus per query).
-
-    Scale story: cell assignment is a map-side projection (centroids
-    ship in the UDF closure, ~n_cells×dim floats); the only shuffle
-    is the broadcast-query cell equi-join; candidates-per-query stays
-    ~n_probe·N/n_cells, so pick ``n_cells ≈ N/target_cell_rows``
-    (same sizing rule as ``auto_n_planes``) to keep rerank cost
-    ~constant per query as the corpus grows. Recall < 1 by
-    construction (boundary neighbors in unprobed cells) — measured in
-    tests, not hidden.
-
-    One-shot convenience: cell assignment is recomputed over the FULL
-    corpus on every call, so repeated query batches against a stable
-    corpus should use ``operators.ivf_index`` (build once into a
-    cell-partitioned inverted file, probe via partition pruning) —
-    at 1M vectors the per-call assignment makes this path cost the
-    same as brute force (BENCH/ANN_RECALL.md).
-
-    Output: (query_id, neighbor_id, cosine_sim, rank)."""
-    x = collect_vector_sample(corpus, id_col, vec_col, max_fit_rows, seed)
-    cent = fit_kmeans_arrays(x, n_cells)
-    cell_of, probe_of = ivf_cell_udfs(cent, n_probe)
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-        cell_of(F.col(vec_col)).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.explode(probe_of(F.col(vec_col))).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-    )
-    return topk_rerank(scored, k)
 
 
 def embedding_near_dup_pairs(

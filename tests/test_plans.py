@@ -278,7 +278,10 @@ def test_suite_unpersist_releases_every_cache(spark, tmp_path):
     already-materialized InMemoryRelations and silently skips the
     heavy stages — which turned the round-3 scaling benchmark into a
     cache-hot partial measurement (2M N=2: run1 1037s, run2 56s)
-    until tools/scaling_bench.py switched to res.unpersist()."""
+    until tools/scaling_bench.py switched to res.unpersist(). The
+    fused loop the bench tools share, ``bench.suite_times``, must
+    leave the same state behind."""
+    import bench
     from anomaly_detection_toolkit_spark.plans.checks import default_suite
     from anomaly_detection_toolkit_spark.plans.runner import run_suite
     from anomaly_detection_toolkit_spark.sources import images
@@ -300,6 +303,10 @@ def test_suite_unpersist_releases_every_cache(spark, tmp_path):
     res.unpersist(blocking=True)
     leaked = cached_rdd_ids() - before
     assert not leaked, f"persisted RDDs leaked past unpersist: {leaked}"
+
+    before = cached_rdd_ids()
+    bench.suite_times(df, runs=2)
+    assert cached_rdd_ids() == before
 
 
 def test_violations_cap_bounds_exemplars_keeps_exact_counts(spark, tmp_path):

@@ -201,17 +201,19 @@ def test_collect_sample_plans_as_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_ivf_topk_recall_and_determinism(spark):
+def test_ivf_query_recall_and_determinism(spark, tmp_path):
     """IVF probe recall vs exact brute force (top-1 must survive
     probing most of the time), and the RNG-free k-means fit must be
     layout-independent — the property the driver-gate oracle's
     out-of-Spark replay relies on."""
+    from anomaly_detection_toolkit_spark.operators import ivf_index
+
     emb = _emb(spark, 600)
     queries = emb.filter(F.col("vec_id") < 10)
     brute = sim.brute_force_topk(emb, queries, k=1).collect()
-    ivf = sim.ivf_topk(
-        emb, queries, k=1, n_cells=8, n_probe=3, seed=42
-    ).collect()
+    path = str(tmp_path / "idx")
+    ivf_index.build_ivf_index(emb, path, n_cells=8, seed=42)
+    ivf = ivf_index.ivf_query(spark, path, queries, k=1, n_probe=3).collect()
     top_b = {r.query_id: r.neighbor_id for r in brute}
     top_i = {r.query_id: r.neighbor_id for r in ivf}
     hits = sum(1 for q in top_b if top_i.get(q) == top_b[q])

@@ -111,30 +111,6 @@ def main() -> None:
     out["lsh_auto_planes"] = lsh
     out["lsh_n_planes"] = sim.auto_n_planes(args.n, 256)
 
-    ivf = {}
-    n_cells = 1024
-    for n_probe in (4,):
-        # one-shot convenience path, kept as the contrast row: cell
-        # assignment recomputed over the full corpus per call, so its
-        # wall time ≈ brute force regardless of n_probe (round 4
-        # measured 32.5s vs 31.2s at every depth)
-        t0 = time.perf_counter()
-        res = sim.ivf_topk(
-            corpus,
-            queries,
-            k=k,
-            n_cells=n_cells,
-            n_probe=n_probe,
-            max_fit_rows=50_000,
-            seed=42,
-        )
-        rec = recall_at_k(spark, res, truth, k, nq)
-        ivf[f"probe_{n_probe}"] = {
-            "recall_at_10": rec,
-            "sec": round(time.perf_counter() - t0, 2),
-        }
-    out["ivf_1024_cells"] = ivf
-
     # --- persisted inverted file (round 5): build once, query many —
     # the retrieval default at scale. Build cost is the one corpus-
     # sized pass; each query batch then reads ONLY its probed cells
@@ -144,6 +120,7 @@ def main() -> None:
 
     from anomaly_detection_toolkit_spark.operators import ivf_index as ivfx
 
+    n_cells = 1024
     idx_dir = tempfile.mkdtemp(prefix="ann_ivf_idx_")
     t0 = time.perf_counter()
     ivfx.build_ivf_index(
@@ -210,11 +187,6 @@ def main() -> None:
         lines.append(
             f"| SRP-LSH | n_tables={parts[1]}, n_probes={parts[3]} "
             f"| {r['recall_at_10']} | {r['sec']} |"
-        )
-    for p, r in ivf.items():
-        lines.append(
-            f"| IVF one-shot (1024 cells, assignment re-run per call) "
-            f"| n_probe={p.split('_')[1]} | {r['recall_at_10']} | {r['sec']} |"
         )
     for p, r in idxq.items():
         tag = " **(retrieval default)**" if r["default"] else ""

@@ -20,14 +20,14 @@ from __future__ import annotations
 
 import argparse
 import json
-import multiprocessing as mp
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tools.scaling_bench import host_cpu_baseline, run_level  # noqa: E402
 
 GEN = r"""
 import sys
@@ -85,43 +85,6 @@ print("RESULT " + json.dumps({"cpus": cpus, "n": n, "times": times}))
 """
 
 
-def _numpy_work(seed: int) -> float:
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    x = 0.0
-    for _ in range(40):
-        a = rng.standard_normal(400_000)
-        x += float(np.sin(a).sum())
-    return x
-
-
-def host_cpu_baseline(levels: list[int]) -> dict[int, float]:
-    out = {}
-    for procs in levels:
-        with mp.Pool(procs) as p:
-            t0 = time.perf_counter()
-            p.map(_numpy_work, range(64))
-            out[procs] = time.perf_counter() - t0
-    return out
-
-
-def run_level(cpus: int, path: str, runs: int) -> dict:
-    proc = subprocess.run(
-        [sys.executable, "-c", CHILD, str(cpus), path, str(runs), str(REPO)],
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        cwd=str(REPO),
-    )
-    for line in proc.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(
-        f"no RESULT from cpus={cpus}: {proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=500_000)
@@ -138,7 +101,7 @@ def main() -> None:
         )
 
     host = host_cpu_baseline(args.levels)
-    results = {c: run_level(c, path, args.runs) for c in args.levels}
+    results = {c: run_level(CHILD, c, path, args.runs) for c in args.levels}
 
     print(json.dumps({"host_probe_sec": host, "results": results}))
     base = min(args.levels)

@@ -36,34 +36,16 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))  # table generation imports the package
 
 CHILD = r"""
-import json, sys, time
+import json, sys
 sys.path.insert(0, sys.argv[4])
 from anomaly_detection_toolkit_spark.session import get_spark
-from anomaly_detection_toolkit_spark.plans.checks import default_suite
-from anomaly_detection_toolkit_spark.plans.runner import run_suite
+from bench import suite_times
 
 cpus, img_path, runs = int(sys.argv[1]), sys.argv[2], int(sys.argv[3])
 spark = get_spark("scaling-bench", cpus=cpus)
 df = spark.read.parquet(img_path).persist()
 n = df.count()
-
-def noop(d):
-    d.write.format("noop").mode("overwrite").save()
-
-times = []
-for _ in range(runs):
-    t0 = time.perf_counter()
-    res = run_suite(df, default_suite())
-    noop(res.violations); noop(res.verdicts); noop(res.metrics)
-    times.append(time.perf_counter() - t0)
-    # res.unpersist(), NOT just violations/metrics: the per-check
-    # persisted subtrees (res.cached — payload-decode violations,
-    # dup-key dims, drift tables) otherwise stay in the cache manager
-    # and the NEXT run's plan-identical persists resolve to the
-    # already-materialized InMemoryRelations, silently skipping the
-    # heavy stages — runs 2+ measured a cache-hot partial suite
-    # (2M N=2: run1 1037s vs run2 56s). bench.py always did this.
-    res.unpersist()
+times = suite_times(df, runs)
 print("RESULT " + json.dumps({"cpus": cpus, "n": n, "times": times}))
 """
 
@@ -79,11 +61,11 @@ def _numpy_work(seed: int) -> float:
     return x
 
 
-def host_cpu_baseline() -> dict[int, float]:
+def host_cpu_baseline(levels: list[int]) -> dict[int, float]:
     """Raw multiprocessing throughput on fixed total work — what the
     VM itself delivers at each process count."""
     out = {}
-    for procs in (2, 8, 32):
+    for procs in levels:
         with mp.Pool(procs) as p:
             t0 = time.perf_counter()
             p.map(_numpy_work, range(64))
@@ -91,9 +73,11 @@ def host_cpu_baseline() -> dict[int, float]:
     return out
 
 
-def run_level(cpus: int, img_path: str, runs: int) -> dict:
+def run_level(child: str, cpus: int, path: str, runs: int) -> dict:
+    """Run the ``child`` source at ``local[cpus]`` in a fresh process
+    (a fresh JVM per level) and return its ``RESULT`` record."""
     proc = subprocess.run(
-        [sys.executable, "-c", CHILD, str(cpus), img_path, str(runs), str(REPO)],
+        [sys.executable, "-c", child, str(cpus), path, str(runs), str(REPO)],
         capture_output=True,
         text=True,
         timeout=3600,
@@ -158,14 +142,14 @@ def main() -> None:
     import os as _os
 
     load_pre = round(_os.getloadavg()[0], 2)
-    host = host_cpu_baseline()
-    results = {c: run_level(c, img_path, args.runs) for c in args.levels}
+    host = host_cpu_baseline(args.levels)
+    results = {c: run_level(CHILD, c, img_path, args.runs) for c in args.levels}
     # settle before the after-probe: the last level's 32-thread JVM
     # just exited and its load is still decaying — probing instantly
     # measures OUR OWN tail, not the co-tenant window (the first gated
     # run false-positived at 62% drift exactly this way)
     time.sleep(75)
-    host_after = host_cpu_baseline()
+    host_after = host_cpu_baseline(args.levels)
     load_post = round(_os.getloadavg()[0], 2)
     drift = max(
         abs(host_after[p] - host[p]) / host[p] for p in host
@@ -187,12 +171,12 @@ def main() -> None:
         "",
         "## Host CPU baseline (raw numpy multiprocessing, fixed total work)",
         "",
-        "| procs | wall (s) | speedup vs 2 | efficiency |",
+        f"| procs | wall (s) | speedup vs {args.levels[0]} | efficiency |",
         "|---|---|---|---|",
     ]
     for procs, t in host.items():
-        sp = host[2] / t
-        eff = sp / (procs / 2)
+        sp = host[args.levels[0]] / t
+        eff = sp / (procs / args.levels[0])
         lines.append(f"| {procs} | {t:.2f} | {sp:.2f}x | {eff:.2f} |")
     lines += [
         "",

@@ -4,7 +4,7 @@ The bench's largest recurring suite record is 500k images; driver-side
 costs (the partition-distinct collect in ``plans/runner.py`` and the
 verdict-grid collect in ``validate.py``) had no measurement at greater
 depth. This tool runs the FUSED suite plus every check in ISOLATION
-(stage_profile.py methodology: input persisted, best-of-N, untimed
+(bench.py methodology: input persisted, best-of-N, untimed
 Python-worker warm-up) at 500k AND 2M images, annotates each level
 with its own loadavg window, flags any stage growing SUPER-linearly
 (stage ratio > data ratio x 1.5 slack), writes
@@ -12,8 +12,8 @@ with its own loadavg window, flags any stage growing SUPER-linearly
 append-only ``BENCH/queries_r{N}.json`` evidence file.
 
 Memory: the 2M payload table is ~70 GB deserialized — far over the
-default 24g heap — so this tool raises the driver heap (env
-``ADT_STRESS_DRIVER_MEM``, default 96g on this 128 GB box) to keep
+default 24g heap — so unless ``ADT_SPARK_DRIVER_MEM`` is set this
+tool raises the driver heap to 96g (sized for a 128 GB host) to keep
 the persist mostly in memory; the remainder spills, same as a real
 executor would. Run it in a QUIET window (check ``uptime`` before and
 after — CLAUDE.md co-tenant-burst discipline) and on >= 60 GB free
@@ -35,11 +35,18 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import (  # noqa: E402
+    _load1,
+    _noop_write,
+    append_round_record,
+    ensure_image_table,
+    suite_times,
+    warm_python_workers,
+)
+
 
 def profile_level(spark, n_images: int, runs: int) -> dict:
-    from bench import _load1, _noop_write, ensure_image_table
     from anomaly_detection_toolkit_spark.plans.checks import default_suite
-    from anomaly_detection_toolkit_spark.plans.runner import run_suite
 
     path = ensure_image_table(spark, n_images, 32)
     level: dict = {"n_images": n_images, "runs": runs, "load1_pre": _load1()}
@@ -48,18 +55,12 @@ def profile_level(spark, n_images: int, runs: int) -> dict:
     df.count()
     level["persist_sec"] = round(time.perf_counter() - t0, 3)
 
-    _noop_write(
-        spark.range(0, 256, 1, 32).mapInPandas(
-            lambda bs: (pdf for pdf in bs), schema="id long"
-        )
-    )
+    warm_python_workers(spark, 32)
     # untimed fused warm-up: the FIRST run_suite in a JVM pays
     # codegen/shuffle/state machinery init (measured ~2x on run 0) —
     # that cost belongs to the session, not to whichever level runs
     # first, and it would skew the cross-level ratios
-    warm = run_suite(df, default_suite())
-    _noop_write(warm.verdicts)
-    warm.unpersist()
+    suite_times(df, 1)
 
     stages: dict[str, float] = {}
     for check in default_suite():
@@ -77,15 +78,7 @@ def profile_level(spark, n_images: int, runs: int) -> dict:
                 d.unpersist()
         stages[label] = round(best, 3)
 
-    fused = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        result = run_suite(df, default_suite())
-        _noop_write(result.violations)
-        _noop_write(result.verdicts)
-        _noop_write(result.metrics)
-        fused = min(fused, time.perf_counter() - t0)
-        result.unpersist()
+    fused = min(suite_times(df, runs))
     df.unpersist()
     level["stages_isolated_sec"] = stages
     level["isolated_sum_sec"] = round(sum(stages.values()), 3)
@@ -110,9 +103,7 @@ def main() -> None:
     if args.round is not None:
         os.environ["ADT_BENCH_ROUND"] = str(args.round)
 
-    os.environ.setdefault(
-        "ADT_SPARK_DRIVER_MEM", os.environ.get("ADT_STRESS_DRIVER_MEM", "96g")
-    )
+    os.environ.setdefault("ADT_SPARK_DRIVER_MEM", "96g")
     from anomaly_detection_toolkit_spark.session import get_spark
 
     spark = get_spark("suite-stress", cpus=32)
@@ -162,8 +153,6 @@ def main() -> None:
         "suite_stress_2m.burst.json" if suspect else "suite_stress_2m.json"
     )
     (bench / target).write_text(json.dumps(record, indent=1))
-
-    from bench import append_round_record
 
     append_round_record(record)
     print(json.dumps(record))
