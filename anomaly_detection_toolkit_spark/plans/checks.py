@@ -89,6 +89,21 @@ def _v(check: str, level: str, column, entity_id, part, value, threshold, messag
     ]
 
 
+def _z_and_fences(
+    value: Column, mu: Column, sd: Column, q1: Column, q3: Column, k: Column
+) -> tuple[Column, Column, Column]:
+    """``(z, lo, hi)`` under the reference's conventions: z-score with
+    the σ=0→1 guard (``ZScoreDetector``, ``statistical.py:23-29``) and
+    ``q1 − k·IQR`` / ``q3 + k·IQR`` fences with the IQR=0→1 guard
+    (``IQROutlierDetector.fit``, ``statistical.py:129-130``: constant
+    data keeps a fence width of 1.0 instead of collapsing to zero).
+    Callers choose σ (population or sample) and any NULL gating."""
+    iqr_raw = q3 - q1
+    iqr = F.when(iqr_raw == 0, F.lit(1.0)).otherwise(iqr_raw)
+    z = (value - mu) / F.when(sd > 0, sd).otherwise(F.lit(1.0))
+    return z, q1 - k * iqr, q3 + k * iqr
+
+
 # ---------------------------------------------------------------------------
 # Schema check
 # ---------------------------------------------------------------------------
@@ -584,22 +599,48 @@ class PayloadCheck(Check):
 # ---------------------------------------------------------------------------
 
 
+def _histogram(df: DataFrame, cols: dict[str, Column], part_col: str) -> DataFrame:
+    """Persisted ``(column, part, bucket, c)`` bucket counts of every
+    watched column in ONE scan.
+
+    The watched columns are unpivoted row-wise (an array+explode
+    generator — fan-out × n_cols of narrow (name, part, bucket)
+    tuples, no binary columns) so a single ``groupBy(column, part,
+    bucket)`` shuffle feeds every column's histogram; NULL buckets are
+    excluded. Persisted because each drift plan reads it more than
+    once, and every uncached read would re-run the input scan
+    (verified in tests/test_plans.py)."""
+    pairs = F.array(
+        *[
+            F.struct(F.lit(name).alias("column"), expr.alias("bucket"))
+            for name, expr in cols.items()
+        ]
+    )
+    return (
+        df.select(F.col(part_col).alias("part"), F.explode(pairs).alias("cb"))
+        .select("part", F.col("cb.column").alias("column"), F.col("cb.bucket").alias("bucket"))
+        .filter(F.col("bucket").isNotNull())
+        .groupBy("column", "part", "bucket")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .persist()
+    )
+
+
 class DriftCheck(Check):
     """Per-partition histogram drift vs the global distribution.
 
     For each watched column a bucket expression maps values to a
     small ordinal domain (raw w/h values, fmt codes, pmod(phash, 64)).
-    ONE ``groupBy(part, bucket)`` pass per column is the only big-data
-    aggregation; everything after runs on a (parts × buckets) grid of
-    at most a few thousand rows:
+    ONE ``groupBy(column, part, bucket)`` pass over all watched columns
+    (``_histogram``) is the only big-data aggregation; everything after
+    runs on a (parts × buckets) grid of at most a few thousand rows:
 
     - KS statistic = max |CDF_part - CDF_global| over the bucket
       ordering (window cumsum on the grid; the empirical-CDF max-gap
       re-expression named in the north star) — the flagging score;
     - PSI = Σ (p - q)·ln(p/q) with ε-clamped proportions — reported
-      as a metric; only used for flagging when ``psi_threshold`` is
-      set (PSI over-fires on buckets absent from one side, so KS is
-      the default gate);
+      as a metric only (PSI over-fires on buckets absent from one
+      side, so KS is the gate);
     - opt-in TOOLKIT PRIMITIVES applied in distribution space (the
       north star names rolling z-score and IQR fences as drift
       scorers): per bucket, the cross-partition distribution of
@@ -641,7 +682,6 @@ class DriftCheck(Check):
         self,
         columns: dict[str, Column] | None = None,
         ks_threshold: float = 0.15,
-        psi_threshold: float | None = None,
         part_col: str = "part",
         z_threshold: float | None = None,
         iqr_k: float | None = None,
@@ -650,7 +690,6 @@ class DriftCheck(Check):
     ):
         self.columns = columns
         self.ks_threshold = ks_threshold
-        self.psi_threshold = psi_threshold
         self.part_col = part_col
         self.z_threshold = z_threshold
         self.iqr_k = iqr_k
@@ -671,54 +710,41 @@ class DriftCheck(Check):
             "phash": F.pmod(F.col("phash"), F.lit(64)).cast("double"),
         }
 
-    def _drift_table(self, df: DataFrame, cols: dict[str, Column]) -> DataFrame:
-        """(column, part, ks, psi) for ALL watched columns in ONE scan.
+    def scores(self, df: DataFrame) -> DataFrame:
+        """Public drift-score table: one row per (column, part) with
+        ``ks``/``psi`` and, when primitives are enabled, ``zmax``/
+        ``iqr_breaches``. Holds a persisted histogram the caller can
+        release via ``self._last_counts.unpersist()``.
 
-        The watched columns are unpivoted row-wise (an array+explode
-        generator — fan-out × n_cols of narrow (name, part, bucket)
-        tuples, no binary columns) so a single ``groupBy(column, part,
-        bucket)`` shuffle feeds every column's histogram. Everything
-        after the groupBy runs on the tiny (cols × parts × buckets)
-        grid: broadcast joins + windows partitioned by (column, part).
+        The histogram feeds two aggregates and one join, all on the
+        tiny (cols × parts × buckets) grid:
+
+        - per (column, bucket): the global count, its proportion ``q``
+          and the global CDF ``cdf_q`` (running sum in bucket order),
+          computed once per bucket rather than once per partition;
+        - per (column, part): the partition total ``tot_p``;
+        - the dense grid = totals ⋈ broadcast(global buckets) ⟕
+          histogram: a bucket a partition never hit is a true zero
+          (``p = 0``), which both KS and PSI need.
         """
         eps = 1e-6
-        pairs = F.array(
-            *[
-                F.struct(F.lit(name).alias("column"), expr.alias("bucket"))
-                for name, expr in cols.items()
-            ]
-        )
-        # persist: six downstream subtrees (parts/buckets/totals/grid)
-        # reference this table — without the cache each would re-run
-        # the full input scan (verified in tests/test_plans.py)
-        counts = (
-            df.select(F.col(self.part_col).alias("part"), F.explode(pairs).alias("cb"))
-            .select("part", F.col("cb.column").alias("column"), F.col("cb.bucket").alias("bucket"))
-            .filter(F.col("bucket").isNotNull())
-            .groupBy("column", "part", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .persist()
-        )
+        counts = _histogram(df, self.columns or self.default_columns(), self.part_col)
         self._last_counts = counts
-        parts = counts.select("column", "part").distinct()
-        buckets = counts.select("column", "bucket").distinct()
-        totals_p = counts.groupBy("column", "part").agg(F.sum("c").alias("tot_p"))
-        totals_g = counts.groupBy("column").agg(F.sum("c").alias("tot_g"))
-        gcounts = counts.groupBy("column", "bucket").agg(F.sum("c").alias("gc"))
-        grid = (
-            parts.join(F.broadcast(buckets), "column")
-            .join(counts, ["column", "part", "bucket"], "left")
-            .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
-            .join(F.broadcast(totals_p), ["column", "part"])
-            .join(F.broadcast(gcounts), ["column", "bucket"])
-            .join(F.broadcast(totals_g), "column")
+        glob = (
+            counts.groupBy("column", "bucket")
+            .agg(F.sum("c").alias("gc"))
+            .withColumn("q", F.col("gc") / F.sum("gc").over(Window.partitionBy("column")))
+            .withColumn(
+                "cdf_q", F.sum("q").over(Window.partitionBy("column").orderBy("bucket"))
+            )
         )
+        totals_p = counts.groupBy("column", "part").agg(F.sum("c").alias("tot_p"))
         ordered = Window.partitionBy("column", "part").orderBy("bucket")
         enriched = (
-            grid.withColumn("p", F.col("c") / F.col("tot_p"))
-            .withColumn("q", F.col("gc") / F.col("tot_g"))
+            totals_p.join(F.broadcast(glob), "column")
+            .join(counts, ["column", "part", "bucket"], "left")
+            .withColumn("p", F.coalesce(F.col("c"), F.lit(0)) / F.col("tot_p"))
             .withColumn("cdf_p", F.sum("p").over(ordered))
-            .withColumn("cdf_q", F.sum("q").over(ordered))
         )
         base = enriched.groupBy("column", "part").agg(
             F.max(F.abs(F.col("cdf_p") - F.col("cdf_q"))).alias("ks"),
@@ -748,9 +774,8 @@ class DriftCheck(Check):
             # per (column, bucket) moments + quartiles across
             # partitions: a (cols × buckets)-row table — broadcast
             # back to the cells. Variance via E[x²]−E[x]² (exact on
-            # quantized integers ≤1e6: pv² ≤ 1e12 « 2^53); z uses the
-            # ZScoreDetector convention (population σ, σ=0→divide by
-            # 1); fences are IQROutlierDetector's q1−k·IQR / q3+k·IQR.
+            # quantized integers ≤1e6: pv² ≤ 1e12 « 2^53); population
+            # σ, as ZScoreDetector uses.
             stats = cells.groupBy("column", "bucket").agg(
                 F.avg("pv").alias("mu"),
                 F.avg(F.col("pv") * F.col("pv")).alias("msq"),
@@ -795,104 +820,78 @@ class DriftCheck(Check):
                 F.percentile(F.col("pv"), F.lit(0.75)).over(wspec).alias("q3"),
             )
         k = F.lit(float(self.iqr_k) if self.iqr_k is not None else 1.5)
-        # the reference's degenerate-IQR guard (IQROutlierDetector.fit,
-        # statistical.py:129-130): q1==q3 → fence width 1.0, not 0
-        iqr_raw = F.col("q3") - F.col("q1")
-        iqr = F.when(iqr_raw == 0, F.lit(1.0)).otherwise(iqr_raw)
-        scored = based.withColumn(
-            "z",
-            (F.col("pv") - F.col("mu"))
-            / F.when(F.col("sd") > 0, F.col("sd")).otherwise(F.lit(1.0)),
-        ).withColumn(
-            "breach",
-            (F.col("pv") < F.col("q1") - k * iqr)
-            | (F.col("pv") > F.col("q3") + k * iqr),
+        z, lo, hi = _z_and_fences(
+            F.col("pv"), F.col("mu"), F.col("sd"), F.col("q1"), F.col("q3"), k
         )
-        prim = scored.groupBy("column", "part").agg(
-            F.max(F.abs(F.col("z"))).alias("zmax"),
-            F.sum(F.col("breach").cast("long")).alias("iqr_breaches"),
+        prim = based.groupBy("column", "part").agg(
+            F.max(F.abs(z)).alias("zmax"),
+            F.sum(((F.col("pv") < lo) | (F.col("pv") > hi)).cast("long")).alias(
+                "iqr_breaches"
+            ),
         )
         return base.join(prim, ["column", "part"])
 
-    def scores(self, df: DataFrame) -> DataFrame:
-        """Public drift-score table: one row per (column, part) with
-        ``ks``/``psi`` and, when primitives are enabled, ``zmax``/
-        ``iqr_breaches``. Holds a persisted histogram the caller can
-        release via ``self._last_counts.unpersist()``."""
-        return self._drift_table(df, self.columns or self.default_columns())
-
     def run(self, df: DataFrame) -> CheckOutput:
-        cols = self.columns or self.default_columns()
         # persist the tiny (cols × parts) drift table so violations and
         # metrics don't re-run the input scan
-        drift = self._drift_table(df, cols).persist()
-        breach = F.col("ks") > self.ks_threshold
-        thr_desc = f"ks<={self.ks_threshold}"
-        if self.psi_threshold is not None:
-            breach = breach | (F.col("psi") > self.psi_threshold)
-            thr_desc += f",psi<={self.psi_threshold}"
-        violations = drift.filter(breach).select(
-            *_v(
-                self.name,
-                "warning",
-                F.col("column"),
-                None,
-                F.col("part"),
-                F.round(F.col("ks"), 4),
-                thr_desc,
-                "distribution drift vs global baseline",
-            )
-        )
+        drift = self.scores(df).persist()
         baseline = (
             f"trailing {self.rolling_window} partitions"
             if self.rolling_window is not None
             else "other partitions"
         )
+        # (breach, value, threshold, message) per armed gate; ONE
+        # explode/inline projection each for violations and metrics
+        # (the ColumnStatsCheck pattern), not one DataFrame per gate
+        gates = [
+            (F.col("ks") > self.ks_threshold, F.round(F.col("ks"), 4),
+             f"ks<={self.ks_threshold}", "distribution drift vs global baseline"),
+        ]
         if self.z_threshold is not None:
-            violations = violations.unionByName(
-                drift.filter(F.col("zmax") > self.z_threshold).select(
-                    *_v(
-                        self.name,
-                        "warning",
-                        F.col("column"),
-                        None,
-                        F.col("part"),
-                        F.round(F.col("zmax"), 4),
-                        f"zmax<={self.z_threshold}",
-                        f"bucket-proportion z-score drift vs {baseline}",
-                    )
-                )
+            gates.append(
+                (F.col("zmax") > self.z_threshold, F.round(F.col("zmax"), 4),
+                 f"zmax<={self.z_threshold}",
+                 f"bucket-proportion z-score drift vs {baseline}")
             )
         if self.iqr_k is not None:
-            violations = violations.unionByName(
-                drift.filter(F.col("iqr_breaches") > 0).select(
-                    *_v(
-                        self.name,
-                        "warning",
-                        F.col("column"),
-                        None,
-                        F.col("part"),
-                        F.col("iqr_breaches").cast("double"),
-                        f"iqr_k={self.iqr_k}",
-                        f"bucket proportion outside IQR fences of {baseline}",
-                    )
-                )
+            gates.append(
+                (F.col("iqr_breaches") > 0, F.col("iqr_breaches").cast("double"),
+                 f"iqr_k={self.iqr_k}",
+                 f"bucket proportion outside IQR fences of {baseline}")
             )
-        metric_cols = [("ks", "ks"), ("psi", "psi")]
-        if self._primitives:
-            metric_cols += [("zmax", "zmax"), ("iqr_breaches", "iqr_breaches")]
-        parts_m = [
-            drift.select(
-                F.lit(self.name).alias("check"),
-                F.col("part").cast("int"),
-                F.concat(F.col("column"), F.lit(f".{suffix}")).alias("metric"),
-                F.col(src).cast("double").alias("value"),
+        flagged = [
+            F.when(
+                breach,
+                F.struct(
+                    value.cast("string").alias("value"),
+                    F.lit(threshold).alias("threshold"),
+                    F.lit(message).alias("message"),
+                ),
             )
-            for src, suffix in metric_cols
+            for breach, value, threshold, message in gates
         ]
-        metrics = parts_m[0]
-        for m in parts_m[1:]:
-            metrics = metrics.unionByName(m)
+        violations = drift.select(
+            "column", "part", F.explode(F.array_compact(F.array(*flagged))).alias("s")
+        ).select(
+            *_v(self.name, "warning", F.col("column"), None, F.col("part"),
+                F.col("s.value"), F.col("s.threshold"), F.col("s.message"))
+        )
+        metric_names = [c for c in drift.columns if c not in ("column", "part")]
+        metrics = drift.select(
+            F.lit(self.name).alias("check"),
+            F.col("part").cast("int"),
+            F.inline(
+                F.array(
+                    *[
+                        F.struct(
+                            F.concat(F.col("column"), F.lit(f".{m}")).alias("metric"),
+                            F.col(m).cast("double").alias("value"),
+                        )
+                        for m in metric_names
+                    ]
+                )
+            ),
+        )
         return CheckOutput(
             violations, metrics, cached=(drift, self._last_counts)
         )
@@ -911,8 +910,9 @@ class PCADriftCheck(Check):
     along a correlated direction) that per-bucket marginal tests
     (z/IQR) and the per-column CDF gap (KS) underweight.
 
-    Scale: the only big-data pass is the same single
-    ``groupBy(part, bucket)`` histogram as ``DriftCheck``; the fitted
+    Scale: the only big-data pass is one ``groupBy(part, bucket)``
+    histogram of its own column, built by the same ``_histogram`` as
+    ``DriftCheck`` uses (the two checks do not share data); the fitted
     table is one row per partition × |bucket domain| columns (domain
     capped at ``max_buckets``), so the PCA suff-stats pass runs over a
     tiny table — through the SAME distributed operator used for
@@ -949,15 +949,7 @@ class PCADriftCheck(Check):
         )
         from anomaly_detection_toolkit_spark.operators.pca import PCADetector
 
-        counts = (
-            df.select(
-                F.col(self.part_col).alias("part"), self.bucket.alias("bucket")
-            )
-            .filter(F.col("bucket").isNotNull())
-            .groupBy("part", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .persist()
-        )
+        counts = _histogram(df, {self.column: self.bucket}, self.part_col)
         domain = sorted(r[0] for r in counts.select("bucket").distinct().collect())
         if len(domain) > self.max_buckets:
             raise ValueError(
@@ -1066,16 +1058,10 @@ def extended_suite(
     --drift-rolling W``). Kept separate from ``default_suite`` so
     the benchmark baselines stay like-for-like; ``validate.py
     --drift-primitives`` selects it."""
-    if rolling_window is not None and int(rolling_window) < 2:
-        raise ValueError("rolling_window must be >= 2")
-    checks = default_suite()
-    for c in checks:
-        if isinstance(c, DriftCheck):
-            c.z_threshold = z_threshold
-            c.iqr_k = iqr_k
-            c.rolling_window = (
-                int(rolling_window) if rolling_window is not None else None
-            )
+    armed = DriftCheck(
+        z_threshold=z_threshold, iqr_k=iqr_k, rolling_window=rolling_window
+    )
+    checks = [armed if isinstance(c, DriftCheck) else c for c in default_suite()]
     checks.append(
         PCADriftCheck(
             "phash",

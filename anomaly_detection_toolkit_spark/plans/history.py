@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from anomaly_detection_toolkit_spark.plans.checks import _v
+from anomaly_detection_toolkit_spark.plans.checks import _v, _z_and_fences
 
 KEYS = ["check", "part", "metric"]
 
@@ -131,24 +131,15 @@ def history_drift(
             scored = scored.filter(F.col("run_seq") == int(current_seq))
 
     sd = F.sqrt(F.greatest(F.col("msq") - F.col("mu") * F.col("mu"), F.lit(0.0)))
-    k = F.lit(float(iqr_k))
-    # the reference's degenerate-IQR guard (IQROutlierDetector.fit,
-    # statistical.py:129-130): constant history → q1==q3 → fence
-    # width falls back to 1.0 instead of collapsing to zero
-    iqr_raw = F.col("q3") - F.col("q1")
-    iqr = F.when(iqr_raw == 0, F.lit(1.0)).otherwise(iqr_raw)
+    z, lo, hi = _z_and_fences(
+        F.col("value"), F.col("mu"), F.col("sd"), F.col("q1"), F.col("q3"),
+        F.lit(float(iqr_k)),
+    )
     out = (
         scored.withColumn("sd", sd)
-        .withColumn(
-            "z",
-            F.when(
-                F.col("hist_n") > 0,
-                (F.col("value") - F.col("mu"))
-                / F.when(F.col("sd") > 0, F.col("sd")).otherwise(F.lit(1.0)),
-            ),
-        )
-        .withColumn("lo", F.col("q1") - k * iqr)
-        .withColumn("hi", F.col("q3") + k * iqr)
+        .withColumn("z", F.when(F.col("hist_n") > 0, z))
+        .withColumn("lo", lo)
+        .withColumn("hi", hi)
         .withColumn(
             "z_breach",
             F.coalesce(F.abs(F.col("z")) > F.lit(float(z_threshold)), F.lit(False)),

@@ -56,7 +56,7 @@ def pmat(planted) -> np.ndarray:
 
 def drift_table(planted, **kw):
     chk = DriftCheck(columns={"b": F.col("bucket_val")}, part_col="part", **kw)
-    out = chk._drift_table(planted, {"b": F.col("bucket_val")})
+    out = chk.scores(planted)
     rows = {int(r["part"]): r for r in out.collect()}
     chk._last_counts.unpersist()
     return rows
@@ -92,6 +92,35 @@ def test_quantized_scores_are_scaled_integers(planted, pmat):
     zmax = np.abs((pq - mu) / np.where(sd > 0, sd, 1.0)).max(axis=1)
     for part in range(N_PARTS):
         assert rows[part]["zmax"] == pytest.approx(zmax[part], rel=1e-9)
+
+
+def test_ks_psi_match_numpy_with_absent_buckets(spark):
+    """KS and PSI against numpy on the DENSE (parts × buckets)
+    proportion matrix. Part 1 has no rows in buckets 0-1 and part 2
+    none in bucket 4: the grid must carry those cells as p = 0, or
+    PSI loses their (0 − q)·ln(ε/q) terms and KS its largest gap."""
+    counts = np.array(
+        [[30, 20, 25, 15, 10], [0, 0, 40, 35, 25], [20, 30, 30, 20, 0]]
+    )
+    data = [
+        (p, float(b))
+        for p in range(counts.shape[0])
+        for b in range(counts.shape[1])
+        for _ in range(int(counts[p, b]))
+    ]
+    df = spark.createDataFrame(data, "part int, bucket_val double")
+    chk = DriftCheck(columns={"b": F.col("bucket_val")})
+    rows = {int(r["part"]): r for r in chk.scores(df).collect()}
+    chk._last_counts.unpersist()
+    p = counts / counts.sum(axis=1, keepdims=True)
+    q = counts.sum(axis=0) / counts.sum()
+    ks = np.abs(np.cumsum(p, axis=1) - np.cumsum(q)).max(axis=1)
+    eps = 1e-6
+    psi = ((p - q) * np.log(np.maximum(p, eps) / np.maximum(q, eps))).sum(axis=1)
+    assert set(rows) == set(range(counts.shape[0]))
+    for part in rows:
+        assert rows[part]["ks"] == pytest.approx(ks[part], rel=1e-9)
+        assert rows[part]["psi"] == pytest.approx(psi[part], rel=1e-9)
 
 
 def test_default_drift_table_has_no_primitive_columns(planted):

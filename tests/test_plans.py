@@ -136,15 +136,20 @@ def test_drift_single_input_pass(spark):
     rows = [("i%d" % i, i % 4, i % 7, "ppm", i * 31, i % 3) for i in range(100)]
     df = spark.createDataFrame(rows, "image_id string, w int, h int, fmt string, phash long, part int")
     chk = DriftCheck()
-    counts_plan = plan_of(chk._drift_table(df, chk.default_columns()))
+    plan = plan_of(chk.scores(df))
     # all four watched columns flow through ONE generate+aggregate
-    # materialization: the counts table is persisted, so every
-    # downstream subtree (parts/buckets/totals/grid — six of them)
-    # reads InMemoryTableScan instead of re-running the input
-    # scan+explode. (The Generate nodes still PRINT under each cache
-    # scan as lineage, so we assert on the cache reads, not on the
-    # printed Generate count.)
-    assert counts_plan.count("InMemoryTableScan") >= 5
+    # materialization (the persisted histogram), which feeds exactly
+    # three readers: the per-bucket global aggregate, the per-part
+    # totals and the left join that densifies the grid. Each cache
+    # scan prints the cached plan (one Generate) as lineage, so a
+    # read that bypassed the cache would show up as a Generate with
+    # no InMemoryTableScan above it.
+    assert plan.count("InMemoryTableScan") == plan.count("Generate explode") == 3
+    # one planned broadcast: the global per-bucket table (this is the
+    # static plan; at run time AQE may also broadcast the small side
+    # of the grid's left join)
+    assert plan.count("BroadcastExchange") <= 1
+    chk._last_counts.unpersist()
 
 
 def test_suite_scan_fusion_reads_binary_once(spark, tmp_path):
