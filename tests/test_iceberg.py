@@ -265,3 +265,87 @@ def test_jar_status_self_reports(spark):
         ice.read_table(spark, "cat.db.t")
     with pytest.raises(RuntimeError, match="ABSENT from this session"):
         ice.load_metadata(spark, "cat.db.t")
+
+
+# ---------------------------------------------------------------------------
+# The Iceberg job end to end, metadata and reads served by the fixtures
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def ice_src(spark, tmp_path_factory):
+    """A 3-part image table standing in for the Iceberg table's data."""
+    from anomaly_detection_toolkit_spark.sources import images
+
+    src = str(tmp_path_factory.mktemp("ice") / "t")
+    images.write_images(spark, src, 300, n_parts=3)
+    return src
+
+
+@pytest.fixture
+def fake_table(monkeypatch, snap_log, entry_log, ice_src):
+    """Serve ``load_metadata`` from the synthetic snapshot/entry logs
+    and ``read_table`` from ``ice_src``; returns the snapshot id each
+    ``read_table`` call was pinned to."""
+    reads: list = []
+
+    def read_table(spark, table, snapshot_id=None):
+        reads.append(snapshot_id)
+        return spark.read.parquet(ice_src)
+
+    monkeypatch.setattr(ice, "load_metadata", lambda spark, table: (snap_log, entry_log))
+    monkeypatch.setattr(ice, "read_table", read_table)
+    return reads
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_iceberg_job_end_to_end(spark, tmp_path, fake_table, ice_src):
+    from anomaly_detection_toolkit_spark.plans import checks as C
+    from anomaly_detection_toolkit_spark.plans import runner as R
+
+    out, out_pq = str(tmp_path / "ice"), str(tmp_path / "pq")
+    suite = C.default_suite()
+
+    def run(snap, out_dir=out):
+        return ice.run_validation_job_iceberg(
+            spark, "cat.db.t", out_dir, checks=suite, snapshot_id=snap
+        )
+
+    r20 = run(20)
+    assert r20.parts_checked == [0, 1, 2]
+    pq = R.run_validation_job(spark, ice_src, out_pq, checks=suite)
+    assert _rows(r20.verdicts) == _rows(pq.verdicts)
+    assert _rows(r20.violations) == _rows(pq.violations)
+    state = R.Ledger(f"{out}/_ledger").load()
+    assert state["snapshot_id"] == 20 and state["completed_parts"] == [0, 1, 2]
+
+    assert run(20) is None  # same snapshot, everything done
+    assert run(30).parts_checked == [1]  # 30 rewrote part 1 only
+    assert R.Ledger(f"{out}/_ledger").load()["completed_parts"] == [0, 1, 2]
+    assert run(99).parts_checked == [0, 1, 2]  # unknown ancestry
+    # a parquet (hex snapshot) ledger is no Iceberg ancestor
+    assert run(20, out_pq).parts_checked == [0, 1, 2]
+    assert set(fake_table) == {20, 30, 99}
+
+
+def test_validate_cli_iceberg_clean_output_reads_the_validated_snapshot(
+    spark, tmp_path, monkeypatch, fake_table
+):
+    """``--clean-output`` must read the snapshot the run validated and
+    recorded, not whatever is current when the clean table is written:
+    rows committed during the run would otherwise pass unvalidated."""
+    import validate
+
+    monkeypatch.setattr(ice, "iceberg_available", lambda spark: True)
+    monkeypatch.setattr(validate, "get_spark", lambda *a, **k: spark)
+    out, clean = str(tmp_path / "out"), str(tmp_path / "clean")
+    rc = validate.main(
+        ["--input", "cat.db.t", "--output", out, "--format", "iceberg",
+         "--clean-output", clean]
+    )
+    assert rc == 0
+    assert fake_table == [99, 99]  # the run's pin, then the clean read
+    assert spark.read.parquet(clean).count() > 0

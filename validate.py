@@ -282,9 +282,13 @@ def _write_clean_output(spark, args) -> None:
             "cap when the clean table must be complete"
         )
     if args.format == "iceberg":
+        from anomaly_detection_toolkit_spark.plans.runner import Ledger
         from anomaly_detection_toolkit_spark.sources.iceberg import read_table
 
-        src = read_table(spark, args.input, snapshot_id=args.snapshot_id)
+        # the snapshot the ledger recorded as validated: the current
+        # one may hold rows committed during the run, never validated
+        ledger = Ledger(os.path.join(args.output, "_ledger")).load()
+        src = read_table(spark, args.input, snapshot_id=ledger["snapshot_id"])
     else:
         src = spark.read.parquet(args.input)
     vpath = os.path.join(args.output, "violations")
