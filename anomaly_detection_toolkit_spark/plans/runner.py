@@ -5,11 +5,13 @@ Per-partition verdict semantics mirror the reference's -1/+1 encoding
 ≥1 error-level violation; warnings leave it passing but are reported.
 
 Resumability (north-star requirement): a run is keyed by a snapshot id
-(content hash of the input's file listing — the parquet/Iceberg
-manifest analogue). The ledger records completed partitions; a re-run
-plans only the remainder by filtering on the partition column, which
-Catalyst turns into partition pruning on a Hive/Iceberg-partitioned
-table (only the remaining partitions' files are even listed).
+(an Iceberg snapshot id, or for parquet the content hash of the
+input's file listing). The ledger records completed partitions; a
+re-run plans only the remainder by filtering on the partition column,
+which Catalyst turns into partition pruning on a Hive/Iceberg-
+partitioned table (only the remaining partitions' files are even
+listed). ``run_job`` is the one job both table sources run; a source
+only says which partitions changed since the ledger's snapshot.
 """
 
 from __future__ import annotations
@@ -142,7 +144,6 @@ def clean_table(
     violations_or_ids: DataFrame,
     entity_col: str = "image_id",
     levels: tuple[str, ...] = ("error",),
-    broadcast: bool | str = "auto",
 ) -> DataFrame:
     """The consumable output of a validation run: ``df`` minus every
     row whose ``entity_col`` appears in the violations — what a
@@ -153,22 +154,14 @@ def clean_table(
     ``entity_id`` column. LEFT ANTI join; the distinct shuffles only
     the violating subset, never the fact side.
 
-    ``broadcast`` picks the anti-join strategy for the fact side:
-
-    - ``"auto"`` (default): no hint — AQE chooses from the id side's
-      ACTUAL runtime size against
-      ``spark.sql.adaptive.autoBroadcastJoinThreshold`` (10 MB
-      default ≈ a few hundred thousand string ids). Sparse defects
-      broadcast (no fact shuffle); a systematically broken ingest
-      (e.g. 30% bad rows — hundreds of millions of ids at 10^12
-      scale) silently degrades to a shuffle join instead of OOMing
-      the driver/executors on a forced broadcast. Pinned by
-      tests/test_plans.py::test_clean_table_auto_switches_join.
-    - ``True``: force the broadcast hint (bypasses the threshold —
-      only when the caller KNOWS the id set is small).
-    - ``False``: force no hint and disqualify broadcast by placing a
-      ``MERGE`` hint, for callers that know the id side is huge and
-      want to skip AQE's attempt."""
+    No join hint: AQE chooses from the id side's ACTUAL runtime size
+    against ``spark.sql.adaptive.autoBroadcastJoinThreshold`` (10 MB
+    default ≈ a few hundred thousand string ids). Sparse defects
+    broadcast (no fact shuffle); a systematically broken ingest (e.g.
+    30% bad rows — hundreds of millions of ids at 10^12 scale)
+    degrades to a shuffle join instead of OOMing the driver/executors
+    on a forced broadcast. Pinned by
+    tests/test_plans.py::test_clean_table_auto_switches_join."""
     cols = set(violations_or_ids.columns)
     if {"level", "entity_id"} <= cols:  # VIOLATION_SCHEMA-shaped
         ids = quarantine_ids(violations_or_ids, levels)
@@ -179,14 +172,8 @@ def clean_table(
             "violations_or_ids needs an entity_id column "
             f"(got {sorted(cols)})"
         )
-    if broadcast is True:
-        side = F.broadcast(ids)
-    elif broadcast is False:
-        side = ids.hint("merge")
-    else:
-        side = ids
     return df.join(
-        side, on=df[entity_col].cast("string") == side["entity_id"], how="left_anti"
+        ids, on=df[entity_col].cast("string") == ids["entity_id"], how="left_anti"
     )
 
 
@@ -367,72 +354,66 @@ class Ledger:
             yield state
             self.save(state)
 
-    def remaining_parts_incremental(
-        self, snap: str, all_parts: list[int], fps: dict[int, str]
-    ) -> list[int]:
-        """Incremental planning: on a NEW snapshot, re-validate only
-        partitions that are new, were never completed, or whose file
-        fingerprint changed since they were validated. Without
-        fingerprints (legacy ledger, non-incremental run, flat table:
-        fps={}) a new snapshot re-runs every partition."""
-        state = self.load()
+    @staticmethod
+    def carried(state: dict, snap, changed: set[int] | None) -> set[int]:
+        """Completed parts that still hold at ``snap``: all of them on
+        the ledger's own snapshot; on an advance, those not in
+        ``changed`` (none when ``changed`` is None: the change is
+        unknown, so every part re-runs)."""
         done = set(state["completed_parts"])
         if state["snapshot_id"] == snap:
-            return [p for p in all_parts if p not in done]
-        recorded = state.get("part_fingerprints", {})
-        return [
-            p
-            for p in all_parts
-            if p not in done
-            or recorded.get(str(p)) is None
-            or recorded.get(str(p)) != fps.get(p)
-        ]
+            return done
+        return set() if changed is None else done - set(changed)
+
+    @staticmethod
+    def remaining_parts(
+        state: dict, snap, all_parts: list[int], changed: set[int] | None
+    ) -> list[int]:
+        """The parts of ``all_parts`` a run at ``snap`` must validate."""
+        done = Ledger.carried(state, snap, changed)
+        return [p for p in all_parts if p not in done]
 
     def record(
         self,
-        snap: str,
+        snap,
         parts: list[int],
         outputs: dict[str, str],
+        changed: set[int] | None = None,
         fingerprints: dict[int, str] | None = None,
-        carry_fps: dict[int, str] | None = None,
         table_schema: dict[str, str] | None = None,
         run_seq: int | None = None,
     ) -> None:
         """Record completed ``parts`` under snapshot ``snap``.
 
-        ``carry_fps`` (the CURRENT per-partition fingerprints) switches
-        a snapshot advance from "reset everything" to the incremental
-        semantics: completed parts whose recorded fingerprint still
-        matches the current one stay completed; only stale entries are
-        dropped. ``fingerprints`` records the validated parts' hashes
-        for future incremental runs."""
+        On a snapshot advance the completed parts outside ``changed``
+        carry forward (see ``carried``). Of ``fingerprints`` (the
+        current per-partition file hashes) those of ``parts`` are
+        recorded for later incremental runs."""
         with self.edit() as state:
             if state["snapshot_id"] != snap:
-                # completed parts reset (or carry forward under
-                # carry_fps) but the RUN history, run-seq counter and
-                # recorded schema survive snapshot advances: run_seq
-                # must stay monotonic or sink rows from different
-                # snapshots would collide on the same run_seq
-                # (history_drift keys its current-vs-history split on
-                # it), and the schema baseline must outlive the
-                # snapshot or evolution at a snapshot boundary — the
-                # common case — would never be diffed
-                recorded = state.pop("part_fingerprints", {})
-                keep = []
-                if carry_fps is not None:
-                    keep = [
-                        p
-                        for p in state["completed_parts"]
-                        if recorded.get(str(p)) is not None
-                        and recorded.get(str(p)) == carry_fps.get(p)
-                    ]
-                    state["part_fingerprints"] = {str(p): recorded[str(p)] for p in keep}
+                # completed parts reset (or carry forward) but the RUN
+                # history, run-seq counter and recorded schema survive
+                # snapshot advances: run_seq must stay monotonic or
+                # sink rows from different snapshots would collide on
+                # the same run_seq (history_drift keys its
+                # current-vs-history split on it), and the schema
+                # baseline must outlive the snapshot or evolution at a
+                # snapshot boundary — the common case — would never be
+                # diffed
+                keep = self.carried(state, snap, changed)
+                kept_fps = {
+                    k: v
+                    for k, v in state.pop("part_fingerprints", {}).items()
+                    if int(k) in keep
+                }
+                if kept_fps:
+                    state["part_fingerprints"] = kept_fps
                 state["snapshot_id"] = snap
-                state["completed_parts"] = keep
+                state["completed_parts"] = sorted(keep)
             state["completed_parts"] = sorted(set(state["completed_parts"]) | set(parts))
             if fingerprints:
                 pf = state.setdefault("part_fingerprints", {})
-                pf.update({str(p): v for p, v in fingerprints.items()})
+                pf.update({str(p): fingerprints[p] for p in parts if p in fingerprints})
             if table_schema is not None:
                 state["table_schema"] = table_schema
             # default past BOTH the run log and any burned reservation —
@@ -541,10 +522,9 @@ def compact_sinks(
         "history_drift",
         "quarantine_ids",
     ),
-    target_files: int = 1,
     _pre_swap_hook=None,
 ) -> dict[str, tuple[int, int]]:
-    """Rewrite each append-mode sink as ``target_files`` parquet files.
+    """Rewrite each append-mode sink as one parquet file.
 
     Every validation run appends a file set to each sink (one file for
     verdicts and metrics; see ``append_run``); years of daily runs
@@ -594,7 +574,7 @@ def compact_sinks(
             cur = versioned.resolve(path)
             files_before = _listing(cur)
             df = spark.read.option("mergeSchema", "true").parquet(cur)
-            df.coalesce(max(1, int(target_files))).write.parquet(new)
+            df.coalesce(1).write.parquet(new)
             n_before = df.count()
             n_after = spark.read.parquet(new).count()
             if n_after != n_before:  # pragma: no cover - defensive
@@ -650,6 +630,69 @@ def record_schema_only_change(
     return True
 
 
+def run_job(
+    spark: SparkSession,
+    df: DataFrame,
+    snap,
+    output_dir: str,
+    changed,
+    checks: list[Check] | None = None,
+    part_col: str = "part",
+    violations_cap: int | None = None,
+    fingerprints: dict[int, str] | None = None,
+) -> SuiteResult | None:
+    """The resumable job over ``df``, a read of the table pinned to
+    snapshot ``snap``: plan the partitions the ledger does not hold as
+    done, run the suite on them, append the outputs and record them.
+
+    A table source supplies only ``changed(state)``: the partitions
+    whose data changed since the ledger's snapshot, or None when that
+    is unknown (every partition re-runs). It is called only when the
+    ledger holds a different snapshot. ``fingerprints`` (the current
+    per-partition file hashes, parquet ``incremental`` runs) are
+    recorded for the validated parts.
+
+    Returns None if nothing is left to validate at ``snap``."""
+    from anomaly_detection_toolkit_spark.plans.checks import default_suite
+
+    ledger = Ledger(os.path.join(output_dir, "_ledger"))
+    state = ledger.load()
+    delta = changed(state) if state["snapshot_id"] != snap else None
+    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
+    todo = Ledger.remaining_parts(state, snap, all_parts, delta)
+    cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    prev_schema = state.get("table_schema")
+    if not todo:
+        # no data to (re-)validate — but an in-place schema change
+        # (Iceberg ALTER TABLE: no new data files, often no data
+        # commit) must still be reported and the baseline advanced
+        record_schema_only_change(
+            spark, ledger, snap, prev_schema, cur_schema, output_dir
+        )
+        return None
+    result = run_suite(
+        df, checks or default_suite(), part_col=part_col, parts=todo,
+        violations_cap=violations_cap,
+    )
+    run_seq, outputs = append_run(
+        spark, ledger, output_dir, result, snap, prev_schema, cur_schema
+    )
+    ledger.record(
+        snap,
+        result.parts_checked,
+        outputs,
+        changed=delta,
+        fingerprints=fingerprints,
+        table_schema=cur_schema,
+        run_seq=run_seq,
+    )
+    # outputs are materialized — release the shared narrow-projection
+    # cache (violations/metrics stay persisted for the caller)
+    for d in result.cached:
+        d.unpersist()
+    return result
+
+
 def run_validation_job(
     spark: SparkSession,
     input_path: str,
@@ -659,52 +702,24 @@ def run_validation_job(
     incremental: bool = False,
     violations_cap: int | None = None,
 ) -> SuiteResult | None:
-    """Resumable end-to-end job: plan remaining partitions from the
-    ledger, run the suite, append outputs, record completion.
+    """``run_job`` over a parquet table, keyed by its file-listing
+    snapshot id.
 
     ``incremental=True`` plans a NEW snapshot with per-partition file
     fingerprints (Iceberg incremental-scan analogue): only new or
     changed ``part=`` directories are re-validated — an append-mostly
     10^12-row table revalidates one day's partition, not its history.
-
-    Returns None if the ledger says everything is already validated
-    for the current snapshot (idempotent re-run)."""
-    from anomaly_detection_toolkit_spark.plans.checks import default_suite
-
-    checks = checks or default_suite()
-    df = spark.read.parquet(input_path)
-    snap = snapshot_id(input_path)
-    ledger = Ledger(os.path.join(output_dir, "_ledger"))
-    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
+    Otherwise, and on a table that is not directory-partitioned, a new
+    snapshot re-validates every partition."""
     fps = partition_fingerprints(input_path, part_col) if incremental else {}
-    todo = ledger.remaining_parts_incremental(snap, all_parts, fps)
-    cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    prev_schema = ledger.load().get("table_schema")
-    if not todo:
-        # no data to (re-)validate — but an in-place schema change
-        # (the metadata-only evolution case) must still be reported
-        # and the recorded baseline advanced
-        record_schema_only_change(
-            spark, ledger, snap, prev_schema, cur_schema, output_dir
-        )
-        return None
-    result = run_suite(
-        df, checks, part_col=part_col, parts=todo, violations_cap=violations_cap
+
+    def changed(state: dict) -> set[int] | None:
+        if not fps:
+            return None
+        recorded = {int(p): fp for p, fp in state.get("part_fingerprints", {}).items()}
+        return {p for p in fps.keys() | recorded.keys() if recorded.get(p) != fps.get(p)}
+
+    return run_job(
+        spark, spark.read.parquet(input_path), snapshot_id(input_path),
+        output_dir, changed, checks, part_col, violations_cap, fps,
     )
-    run_seq, outputs = append_run(
-        spark, ledger, output_dir, result, snap, prev_schema, cur_schema
-    )
-    ledger.record(
-        snap,
-        result.parts_checked,
-        outputs,
-        fingerprints={p: fps[p] for p in result.parts_checked if p in fps} or None,
-        carry_fps=fps if incremental else None,
-        table_schema=cur_schema,
-        run_seq=run_seq,
-    )
-    # outputs are materialized — release the shared narrow-projection
-    # cache (violations/metrics stay persisted for the caller)
-    for d in result.cached:
-        d.unpersist()
-    return result

@@ -15,12 +15,15 @@ availability-gated seam:
   (``snapshot_id()`` file-listing hash + per-partition fingerprints),
   and ``read_table`` raises a clear error instead of guessing.
 
-Everything decision-making here — the snapshot ancestry walk, the
-changed-partition computation, the ledger advance — is pure code over
-metadata-SHAPED inputs (tiny driver-side snapshot log; a DataFrame
-with Iceberg's documented ``entries`` columns), so the exact logic the
-cluster path runs is unit-tested against synthetic metadata in
-``tests/test_iceberg.py`` without the jar.
+The job itself is ``plans.runner.run_job``, the same one the parquet
+source runs; this module only pins the read and answers which
+partitions changed since the ledger's snapshot (``changed_since``).
+That decision — the snapshot ancestry walk, the changed-partition
+computation — is pure code over metadata-SHAPED inputs (tiny
+driver-side snapshot log; a DataFrame with Iceberg's documented
+``entries`` columns), so the exact logic the cluster path runs is
+unit-tested against synthetic metadata in ``tests/test_iceberg.py``
+without the jar.
 
 Scale notes (10^12-row table):
 - the ``snapshots`` metadata table is tiny (one row per commit —
@@ -38,7 +41,6 @@ scope (SURVEY §3.4, §7.0 non-goal lifted to a seam here).
 
 from __future__ import annotations
 
-import time
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -222,22 +224,21 @@ def changed_partitions(
     return sorted(int(r["part"]) for r in touched.collect() if r["part"] is not None)
 
 
-def plan_incremental_parts(
+def changed_since(
     snapshots_df: DataFrame,
     entries_df: DataFrame,
-    last_validated: int | None,
+    last_validated,
     current: int,
-    completed_parts: Iterable[int],
-    all_parts: Iterable[int],
     part_col: str = "part",
     skip_replace: bool = True,
-) -> list[int]:
-    """Partitions to (re-)validate moving ``last_validated → current``.
+) -> set[int] | None:
+    """Partitions whose data changed moving ``last_validated → current``.
 
-    A part must run iff it was never completed, or its data changed in
-    a snapshot after the one the ledger validated. Unknown ancestry
-    (rollback/branch/deep expiry) degrades to the full re-run — same
-    policy as the manifest fallback's fingerprint mismatch.
+    None when that is unknown and every partition must re-run: the
+    ancestry is unknown (rollback/branch/deep expiry — the same policy
+    as the parquet fingerprint mismatch), or ``last_validated`` is not
+    an Iceberg snapshot id (no ledger yet, or a parquet ledger's hex
+    file-listing hash in the same output dir).
 
     ``skip_replace`` (default True): snapshots with
     ``operation = 'replace'`` — ``rewrite_data_files`` compaction —
@@ -247,25 +248,22 @@ def plan_incremental_parts(
     10^12-row table must not trigger mass re-validation. Pass False
     to treat compaction as a change (e.g. when auditing the rewrite
     itself)."""
-    done = {int(p) for p in completed_parts}
-    parts = [int(p) for p in all_parts]
-    if last_validated is not None and int(last_validated) == int(current):
-        return [p for p in parts if p not in done]
+    if not isinstance(last_validated, int):
+        return None
     delta = snapshots_between(snapshots_df, last_validated, current)
     if delta is None:
-        return parts
+        return None
     if skip_replace and delta:
         ops = {
             int(r["snapshot_id"]): r["operation"]
             for r in snapshots_df.select("snapshot_id", "operation").collect()
         }
         delta = [s for s in delta if ops.get(int(s)) != "replace"]
-    changed = set(changed_partitions(entries_df, delta, part_col))
-    return [p for p in parts if p not in done or p in changed]
+    return set(changed_partitions(entries_df, delta, part_col))
 
 
 # ---------------------------------------------------------------------------
-# Resumable job wiring (reuses plans.runner's Ledger + run_suite)
+# The resumable job: plans.runner.run_job, planned from the snapshot log
 # ---------------------------------------------------------------------------
 
 
@@ -278,100 +276,28 @@ def run_validation_job_iceberg(
     snapshot_id: int | None = None,
     violations_cap: int | None = None,
 ):
-    """Iceberg-native variant of ``runner.run_validation_job``.
-
-    Pins the read to ``snapshot_id`` (default: current), plans the
-    remaining partitions from the ledger + snapshot log, runs the
-    suite, appends outputs, records completion under the REAL
-    snapshot id. Requires the runtime jar (``iceberg_available``).
-    """
-    import os
-
-    from anomaly_detection_toolkit_spark.plans.checks import default_suite
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger, append_run, run_suite
+    """``runner.run_job`` over an Iceberg table: the read is pinned to
+    ``snapshot_id`` (default: current), the ledger and the sinks'
+    lineage record that REAL snapshot id, and the partitions changed
+    since the ledger's snapshot come from the snapshot log
+    (``changed_since``). Requires the runtime jar
+    (``iceberg_available``)."""
+    from anomaly_detection_toolkit_spark.plans.runner import run_job
 
     snapshots_df, entries_df = load_metadata(spark, table)
     snap = snapshot_id if snapshot_id is not None else current_snapshot_id(snapshots_df)
     if snap is None:
         return None  # empty table, nothing to validate
-    df = read_table(spark, table, snapshot_id=snap)
-    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
-
-    ledger = Ledger(os.path.join(output_dir, "_ledger"))
-    state = ledger.load()
-    try:
-        last = int(state["snapshot_id"]) if state["snapshot_id"] is not None else None
-    except (TypeError, ValueError):
-        # a manifest-fallback (hex-string) ledger in the same output
-        # dir: not an Iceberg ancestor — plan a full re-run
-        last = None
-    todo = plan_incremental_parts(
-        snapshots_df,
-        entries_df,
-        last,
-        int(snap),
-        state["completed_parts"],
-        all_parts,
+    snap = int(snap)
+    return run_job(
+        spark,
+        read_table(spark, table, snapshot_id=snap),
+        snap,
+        output_dir,
+        lambda state: changed_since(
+            snapshots_df, entries_df, state["snapshot_id"], snap, part_col
+        ),
+        checks,
         part_col,
-    )
-    cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    if not todo:
-        # Iceberg ALTER TABLE (add/rename/promote column) creates no
-        # new data files and often no data commit — the planner sees
-        # nothing to validate, but the in-place evolution must still
-        # be reported and the recorded schema baseline advanced
-        from anomaly_detection_toolkit_spark.plans.runner import (
-            record_schema_only_change,
-        )
-
-        record_schema_only_change(
-            spark, ledger, int(snap), state.get("table_schema"),
-            cur_schema, output_dir,
-        )
-        return None
-    result = run_suite(
-        df,
-        checks or default_suite(),
-        part_col=part_col,
-        parts=todo,
-        violations_cap=violations_cap,
-    )
-    # lineage snapshot_id: the REAL Iceberg snapshot the read was pinned to
-    run_seq, outputs = append_run(
-        spark, ledger, output_dir, result, snap, state.get("table_schema"), cur_schema
-    )
-    record_iceberg(
-        ledger, int(snap), result.parts_checked, set(todo), outputs,
-        table_schema=cur_schema, run_seq=run_seq,
-    )
-    for d in result.cached:
-        d.unpersist()
-    return result
-
-
-def record_iceberg(
-    ledger,
-    snap: int,
-    validated_parts: list[int],
-    planned_parts: set[int],
-    outputs: dict[str, str],
-    table_schema: dict[str, str] | None = None,
-    run_seq: int | None = None,
-) -> None:
-    """Advance the ledger to Iceberg snapshot ``snap``.
-
-    On a snapshot change, completed parts the planner did NOT schedule
-    (their data is unchanged per the snapshot log) carry forward —
-    the iceberg-metadata analogue of ``Ledger.record(carry_fps=...)``.
-    """
-    with ledger.edit() as state:
-        if state["snapshot_id"] != snap:
-            state["completed_parts"] = [
-                p for p in state["completed_parts"] if p not in planned_parts
-            ]
-            state["snapshot_id"] = snap
-            state.pop("part_fingerprints", None)
-    ledger.record(
-        snap, [int(p) for p in validated_parts], outputs,
-        table_schema=table_schema, run_seq=run_seq,
+        violations_cap,
     )

@@ -4,7 +4,9 @@ The Iceberg runtime jar is absent here (SURVEY §7.0), so these tests
 build DataFrames with exactly Iceberg's documented ``snapshots`` /
 ``entries`` metadata schemas and verify the planning code the cluster
 path would run: ancestry walk, snapshot delta, changed-partition
-computation, incremental plan, and the ledger advance.
+computation, incremental plan, and the ledger advance — and drive
+the Iceberg job end to end with the metadata tables and the table
+read served by fixtures.
 """
 
 from __future__ import annotations
@@ -122,45 +124,47 @@ def test_changed_partitions_ignores_existing_entries(entry_log):
     assert ice.changed_partitions(entry_log, []) == []
 
 
+def plan(log, ents, last, current, completed_parts, all_parts, **kw):
+    """The parts a run at ``current`` plans from a ledger that holds
+    ``completed_parts`` at snapshot ``last``."""
+    state = {"snapshot_id": last, "completed_parts": completed_parts}
+    changed = ice.changed_since(log, ents, last, current, **kw)
+    return Ledger.remaining_parts(state, current, all_parts, changed)
+
+
 def test_plan_incremental(snap_log, entry_log):
     # validated through snap 20 with parts 0,1,2 done; snap 30 rewrote
     # part 1 → only part 1 reruns
-    todo = ice.plan_incremental_parts(
-        snap_log, entry_log, 20, 30, completed_parts=[0, 1, 2], all_parts=[0, 1, 2]
-    )
+    todo = plan(snap_log, entry_log, 20, 30, completed_parts=[0, 1, 2], all_parts=[0, 1, 2])
     assert todo == [1]
     # a part never completed runs even though unchanged
-    todo = ice.plan_incremental_parts(
-        snap_log, entry_log, 20, 30, completed_parts=[0, 1], all_parts=[0, 1, 2]
-    )
+    todo = plan(snap_log, entry_log, 20, 30, completed_parts=[0, 1], all_parts=[0, 1, 2])
     assert todo == [1, 2]
     # same snapshot → plain resume (remaining parts only)
-    todo = ice.plan_incremental_parts(
-        snap_log, entry_log, 30, 30, completed_parts=[0], all_parts=[0, 1, 2]
-    )
+    todo = plan(snap_log, entry_log, 30, 30, completed_parts=[0], all_parts=[0, 1, 2])
     assert todo == [1, 2]
     # unknown ancestry (branch head 99 → 30) → full re-run
-    todo = ice.plan_incremental_parts(
-        snap_log, entry_log, 99, 30, completed_parts=[0, 1, 2], all_parts=[0, 1, 2]
-    )
+    todo = plan(snap_log, entry_log, 99, 30, completed_parts=[0, 1, 2], all_parts=[0, 1, 2])
     assert todo == [0, 1, 2]
+    # a parquet ledger's hex snapshot is no Iceberg ancestor
+    assert ice.changed_since(snap_log, entry_log, "9f86d081884c7d65", 30) is None
 
 
-def test_record_iceberg_carries_unchanged_parts(tmp_path):
+def test_ledger_record_carries_unchanged_parts(tmp_path):
     ledger = Ledger(str(tmp_path))
     # first full run at snapshot 20
-    ice.record_iceberg(ledger, 20, [0, 1, 2], planned_parts={0, 1, 2}, outputs={})
+    ledger.record(20, [0, 1, 2], {}, changed=None)
     state = ledger.load()
     assert state["snapshot_id"] == 20 and state["completed_parts"] == [0, 1, 2]
-    # snapshot 30 replanned only part 1: parts 0,2 carry forward
-    ice.record_iceberg(ledger, 30, [1], planned_parts={1}, outputs={})
+    # snapshot 30 changed only part 1: parts 0,2 carry forward
+    ledger.record(30, [1], {}, changed={1})
     state = ledger.load()
     assert state["snapshot_id"] == 30
     assert state["completed_parts"] == [0, 1, 2]
     assert len(state["runs"]) == 2
     # a crash before completing part 1 at snap 30 would have left it
     # out of completed_parts; simulate the resume bookkeeping
-    ice.record_iceberg(ledger, 40, [], planned_parts={0, 1, 2}, outputs={})
+    ledger.record(40, [], {}, changed={0, 1, 2})
     assert ledger.load()["completed_parts"] == []
 
 
@@ -234,7 +238,7 @@ def test_compaction_does_not_mark_partitions_changed(
     changing logical rows: with everything validated through snap 30,
     moving to snap 50 must re-run ONLY part 4 (the real append) —
     parts 0/3's compaction churn is skipped."""
-    todo = ice.plan_incremental_parts(
+    todo = plan(
         expired_log,
         expired_entries,
         30,
@@ -244,7 +248,7 @@ def test_compaction_does_not_mark_partitions_changed(
     )
     assert todo == [4]
     # opting out (auditing the rewrite itself) re-runs compacted parts
-    todo = ice.plan_incremental_parts(
+    todo = plan(
         expired_log,
         expired_entries,
         30,

@@ -422,12 +422,6 @@ def test_clean_table_auto_switches_join(spark):
             else:
                 spark.conf.set(k, v)
 
-    # forced broadcast stays available for callers that KNOW the id
-    # set is small
-    out_b = R.clean_table(fact, bad.limit(5), entity_col="image_id", broadcast=True)
-    out_b.collect()
-    assert "BroadcastExchange" in out_b._jdf.queryExecution().executedPlan().toString()
-
 
 def test_repeat_validation_run_reuses_generated_code(spark, tmp_path):
     """A second plan-identical validation run in one session must find

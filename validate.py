@@ -6,8 +6,11 @@
 Runs the resumable validation job (SURVEY §3.4): plan the remaining
 partitions from the ledger, run the default check suite, append
 verdicts/violations/metrics parquet, record the ledger entry. A
-re-run over an unchanged snapshot is a no-op; a changed snapshot
-(new/modified input files) re-validates everything.
+re-run over an unchanged snapshot is a no-op. A changed snapshot
+re-validates the partitions whose data changed — per-partition file
+fingerprints under ``--incremental``, the snapshot log under
+``--format iceberg`` — and every partition when that is unknown
+(always, for parquet without ``--incremental``).
 
 Under spark-submit the cluster master is inherited; run directly
 (``python validate.py``) it falls back to local[all-cores].
