@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from anomaly_detection_toolkit_spark import versioned
 from anomaly_detection_toolkit_spark.plans.checks import (
     Check,
+    default_suite,
     empty_metrics,
     empty_violations,
 )
@@ -635,7 +637,7 @@ def run_job(
     df: DataFrame,
     snap,
     output_dir: str,
-    changed,
+    changed: Callable[[dict], set[int] | None],
     checks: list[Check] | None = None,
     part_col: str = "part",
     violations_cap: int | None = None,
@@ -653,8 +655,6 @@ def run_job(
     recorded for the validated parts.
 
     Returns None if nothing is left to validate at ``snap``."""
-    from anomaly_detection_toolkit_spark.plans.checks import default_suite
-
     ledger = Ledger(os.path.join(output_dir, "_ledger"))
     state = ledger.load()
     delta = changed(state) if state["snapshot_id"] != snap else None

@@ -46,6 +46,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from anomaly_detection_toolkit_spark.plans.runner import run_job
+
 # iceberg entries.status codes (Iceberg spec, manifest entry status)
 STATUS_EXISTING, STATUS_ADDED, STATUS_DELETED = 0, 1, 2
 
@@ -282,8 +284,6 @@ def run_validation_job_iceberg(
     since the ledger's snapshot come from the snapshot log
     (``changed_since``). Requires the runtime jar
     (``iceberg_available``)."""
-    from anomaly_detection_toolkit_spark.plans.runner import run_job
-
     snapshots_df, entries_df = load_metadata(spark, table)
     snap = snapshot_id if snapshot_id is not None else current_snapshot_id(snapshots_df)
     if snap is None:
