@@ -535,7 +535,6 @@ def drift_primitives_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "len_b": F.col("len_b").cast("double"),
             "hash_b": F.col("hash_b").cast("double"),
         },
-        part_col="part",
         # with 4 partitions max |z| is sqrt(3)=1.732 (population
         # std over n=4); 1.72 lets only the planted all-English
         # partition trip the z gate
@@ -685,7 +684,6 @@ def drift_rolling_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "len_b": F.col("len_b").cast("double"),
             "hash_b": F.col("hash_b").cast("double"),
         },
-        part_col="part",
         z_threshold=1.4,
         iqr_k=1.5,
         quantize=6,
@@ -814,7 +812,6 @@ def drift_pca_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b"),
         n_components=0.8,
         contamination=0.05,
-        part_col="part",
     )
     out = chk.scores(fact)
     return out.select(

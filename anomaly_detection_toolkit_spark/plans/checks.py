@@ -168,21 +168,17 @@ def schema_diff(
 
 
 def schema_evolution_violations(
-    spark: SparkSession, prev: dict[str, str] | None, cur: dict[str, str]
+    spark: SparkSession, prev: dict[str, str], cur: dict[str, str]
 ) -> DataFrame:
     """Warning-level VIOLATION_SCHEMA rows for every schema change vs
-    the previous run (empty on the first run / no change). Warnings,
-    not errors: evolution may be intentional — the declared-contract
-    SchemaCheck stays the error-level gate."""
-    rows = (
-        []  # first run: no baseline to diff against
-        if prev is None
-        else [
-            ("schema_evolution", "warning", col, None, -1, ct, pt,
-             f"column {kind} vs previous run")
-            for col, kind, pt, ct in schema_diff(prev, cur)
-        ]
-    )
+    the previous run (empty on no change). Warnings, not errors:
+    evolution may be intentional — the declared-contract SchemaCheck
+    stays the error-level gate."""
+    rows = [
+        ("schema_evolution", "warning", col, None, -1, ct, pt,
+         f"column {kind} vs previous run")
+        for col, kind, pt, ct in schema_diff(prev, cur)
+    ]
     return local_rows_df(spark, rows, VIOLATION_SCHEMA)
 
 
@@ -205,10 +201,11 @@ class ColumnStatsCheck(Check):
     plus quantile bounds ``"p<NN>_min"`` / ``"p<NN>_max"`` (e.g.
     ``"p99_max": 4096`` fails a partition whose 99th-percentile width
     exceeds 4096). Quantiles are EXACT (``percentile``) by default;
-    ``approx=True`` switches to ``percentile_approx`` — a mergeable
-    positional sketch whose partial states combine map-side like the
-    other aggregates, the right trade at 10^12 rows where an exact
-    per-partition sort-based percentile would dominate the pass.
+    ``approx=True`` switches to ``percentile_approx`` (accuracy 10000)
+    — a mergeable positional sketch whose partial states combine
+    map-side like the other aggregates, the right trade at 10^12 rows
+    where an exact per-partition sort-based percentile would dominate
+    the pass.
     """
 
     name = "column_stats"
@@ -216,14 +213,10 @@ class ColumnStatsCheck(Check):
     def __init__(
         self,
         constraints: dict[str, dict[str, float]],
-        part_col: str = "part",
         approx: bool = False,
-        approx_accuracy: int = 10000,
     ):
         self.constraints = constraints
-        self.part_col = part_col
         self.approx = approx
-        self.approx_accuracy = approx_accuracy
 
     @staticmethod
     def _quantile_tags(bounds: dict[str, float]) -> dict[str, float]:
@@ -256,12 +249,12 @@ class ColumnStatsCheck(Check):
             ]
             for tag, q in self._quantile_tags(bounds).items():
                 agg = (
-                    F.percentile_approx(col, F.lit(q), F.lit(self.approx_accuracy))
+                    F.percentile_approx(col, F.lit(q), F.lit(10000))
                     if self.approx
                     else F.percentile(col, F.lit(q))
                 )
                 aggs.append(agg.alias(f"{c}__{self._tag_col(tag)}"))
-        return df.groupBy(F.col(self.part_col).alias("part")).agg(*aggs)
+        return df.groupBy("part").agg(*aggs)
 
     def run(self, df: DataFrame) -> CheckOutput:
         # tiny (n_parts rows); persisted so the metric/violation
@@ -372,10 +365,9 @@ class UniquenessCheck(Check):
 
     name = "uniqueness"
 
-    def __init__(self, key_col: str, entity_col: str = "image_id", part_col: str = "part"):
+    def __init__(self, key_col: str, entity_col: str = "image_id"):
         self.key_col = key_col
         self.entity_col = entity_col
-        self.part_col = part_col
         self.name = f"uniqueness_{key_col}"
 
     def run(self, df: DataFrame) -> CheckOutput:
@@ -390,7 +382,7 @@ class UniquenessCheck(Check):
         # instead of re-aggregating 10^12 keys exactly for a metric.
         dup_keys = keys.filter(F.col("key_count") > 1).persist()
         violations = (
-            df.select(key, self.entity_col, self.part_col)
+            df.select(key, self.entity_col, "part")
             .join(dup_keys, key, "inner")
             .select(
                 *_v(
@@ -398,7 +390,7 @@ class UniquenessCheck(Check):
                     "error",
                     key,
                     F.col(self.entity_col),
-                    F.col(self.part_col),
+                    F.col("part"),
                     F.col(key),
                     "unique",
                     F.concat(F.lit("duplicate key (count="), F.col("key_count"), F.lit(")")),
@@ -443,16 +435,14 @@ class ReferentialCheck(Check):
         caption_col: str = "caption",
         ref_col: str = "image_id",
         pattern: str = r"(img_\d{12})",
-        part_col: str = "part",
     ):
         self.caption_col = caption_col
         self.ref_col = ref_col
         self.pattern = pattern
-        self.part_col = part_col
 
     def run(self, df: DataFrame) -> CheckOutput:
         referenced = df.select(
-            F.col(self.part_col).alias("part"),
+            "part",
             F.col(self.ref_col).alias("entity"),
             F.regexp_extract(F.col(self.caption_col), self.pattern, 1).alias("ref_id"),
         )
@@ -509,7 +499,6 @@ class PayloadCheck(Check):
         psnr_db: float = 40.0,
         reference_pixels: Callable[[str, int, int], np.ndarray] | None = None,
         expected_caption: Callable[[str], str] | None = None,
-        part_col: str = "part",
     ):
         from anomaly_detection_toolkit_spark.sources import images as imgmod
 
@@ -518,14 +507,13 @@ class PayloadCheck(Check):
             lambda image_id, w, h: imgmod.gen_pixels(imgmod.id_num(image_id), w, h)
         )
         self.expected_caption = expected_caption or imgmod.caption_of
-        self.part_col = part_col
 
     def run(self, df: DataFrame) -> CheckOutput:
         name = self.name
         psnr_db = self.psnr_db
         ref_fn = self.reference_pixels
         cap_fn = self.expected_caption
-        cols = df.select("image_id", "bytes", "fmt", "caption", F.col(self.part_col).alias("part"))
+        cols = df.select("image_id", "bytes", "fmt", "caption", "part")
 
         def check_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             lossless_fmts = codecs.LOSSLESS
@@ -599,7 +587,7 @@ class PayloadCheck(Check):
 # ---------------------------------------------------------------------------
 
 
-def _histogram(df: DataFrame, cols: dict[str, Column], part_col: str) -> DataFrame:
+def _histogram(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     """Persisted ``(column, part, bucket, c)`` bucket counts of every
     watched column in ONE scan.
 
@@ -617,7 +605,7 @@ def _histogram(df: DataFrame, cols: dict[str, Column], part_col: str) -> DataFra
         ]
     )
     return (
-        df.select(F.col(part_col).alias("part"), F.explode(pairs).alias("cb"))
+        df.select("part", F.explode(pairs).alias("cb"))
         .select("part", F.col("cb.column").alias("column"), F.col("cb.bucket").alias("bucket"))
         .filter(F.col("bucket").isNotNull())
         .groupBy("column", "part", "bucket")
@@ -682,7 +670,6 @@ class DriftCheck(Check):
         self,
         columns: dict[str, Column] | None = None,
         ks_threshold: float = 0.15,
-        part_col: str = "part",
         z_threshold: float | None = None,
         iqr_k: float | None = None,
         quantize: int | None = None,
@@ -690,7 +677,6 @@ class DriftCheck(Check):
     ):
         self.columns = columns
         self.ks_threshold = ks_threshold
-        self.part_col = part_col
         self.z_threshold = z_threshold
         self.iqr_k = iqr_k
         self.quantize = quantize
@@ -728,7 +714,7 @@ class DriftCheck(Check):
           (``p = 0``), which both KS and PSI need.
         """
         eps = 1e-6
-        counts = _histogram(df, self.columns or self.default_columns(), self.part_col)
+        counts = _histogram(df, self.columns or self.default_columns())
         self._last_counts = counts
         glob = (
             counts.groupBy("column", "bucket")
@@ -927,14 +913,12 @@ class PCADriftCheck(Check):
         bucket: Column,
         n_components: float | int = 0.95,
         contamination: float = 0.05,
-        part_col: str = "part",
         max_buckets: int = 256,
     ):
         self.column = column
         self.bucket = bucket
         self.n_components = n_components
         self.contamination = contamination
-        self.part_col = part_col
         self.max_buckets = max_buckets
 
     def scores(self, df: DataFrame) -> DataFrame:
@@ -949,7 +933,7 @@ class PCADriftCheck(Check):
         )
         from anomaly_detection_toolkit_spark.operators.pca import PCADetector
 
-        counts = _histogram(df, {self.column: self.bucket}, self.part_col)
+        counts = _histogram(df, {self.column: self.bucket})
         domain = sorted(r[0] for r in counts.select("bucket").distinct().collect())
         if len(domain) > self.max_buckets:
             raise ValueError(

@@ -32,6 +32,7 @@ from anomaly_detection_toolkit_spark.plans.checks import (
     default_suite,
     empty_metrics,
     empty_violations,
+    schema_evolution_violations,
 )
 
 VERDICT_SCHEMA = "part int, check string, n_errors long, n_warnings long, verdict int"
@@ -189,11 +190,20 @@ def run_suite(
     """Run checks over (optionally a subset of) partitions.
 
     ``parts=None`` runs everything; a list filters via the partition
-    column (partition pruning on partitioned storage).
+    column (partition pruning on partitioned storage). Checks and sinks
+    read the partition column as ``part``: a table partitioned by
+    another ``part_col`` is renamed once here.
     """
     spark = df.sparkSession
+    if part_col != "part":
+        if "part" in df.columns:
+            raise ValueError(
+                f"the table has a 'part' column besides part_col={part_col!r}; "
+                "checks read the partition column as 'part'"
+            )
+        df = df.withColumnRenamed(part_col, "part")
     if parts is not None:
-        df = df.filter(F.col(part_col).isin([int(p) for p in parts]))
+        df = df.filter(F.col("part").isin([int(p) for p in parts]))
 
     # SCAN FUSION: every check except the payload decode reads only the
     # narrow (non-binary) columns. Running each check against the raw
@@ -220,7 +230,7 @@ def run_suite(
         cached = (shared,)
 
     # the distinct-parts collect doubles as the cache-materializing pass
-    all_parts = [r[0] for r in shared.select(part_col).distinct().collect()]
+    all_parts = [r[0] for r in shared.select("part").distinct().collect()]
 
     v_list, m_list = [], []
     for check in checks:
@@ -471,45 +481,6 @@ def append_sinks(
     return {name: os.path.join(output_dir, name) for name in frames}
 
 
-def append_run(
-    spark: SparkSession,
-    ledger: Ledger,
-    output_dir: str,
-    result: SuiteResult,
-    snap,
-    prev_schema: dict[str, str] | None,
-    cur_schema: dict[str, str],
-) -> tuple[int, dict[str, str]]:
-    """Append a suite run's verdicts, violations (plus warning rows
-    for undeclared schema evolution) and metrics; returns (run_seq,
-    sink paths). Every row carries its run lineage: the run_seq is
-    RESERVED before any sink write, so a crash mid-job can never lead
-    to a reused run_seq in the history that history_drift scores."""
-    from anomaly_detection_toolkit_spark.plans.checks import (
-        schema_evolution_violations,
-    )
-
-    run_seq = ledger.reserve_run_seq()
-    evo = schema_evolution_violations(spark, prev_schema, cur_schema)
-    outputs = append_sinks(
-        output_dir,
-        {
-            "verdicts": result.verdicts,
-            "violations": result.violations.unionByName(evo),
-            # a union of tiny per-check aggregates: one file per check
-            # partition (28 per default-suite run) unless REBALANCE
-            # lets AQE size the write from the bytes. Verdicts come
-            # out of an AQE-sized shuffle already; a rebalanced dense
-            # violations set wrote 3x the bytes with ~45% more CPU
-            # (docs/SCALE.md).
-            "metrics": result.metrics.hint("rebalance"),
-        },
-        run_seq,
-        str(snap),
-    )
-    return run_seq, outputs
-
-
 class UnversionedSinkError(RuntimeError):
     """A sink is a plain directory, not a ``versioned`` published link."""
 
@@ -529,7 +500,7 @@ def compact_sinks(
     """Rewrite each append-mode sink as one parquet file.
 
     Every validation run appends a file set to each sink (one file for
-    verdicts and metrics; see ``append_run``); years of daily runs
+    verdicts and metrics; see ``run_job``); years of daily runs
     pile up one set per run, a classic small-files problem (listing +
     footer reads dominate). The sinks stay small in BYTES, so
     compaction is a single read→write of each (with
@@ -594,44 +565,6 @@ def compact_sinks(
     return done
 
 
-def record_schema_only_change(
-    spark: SparkSession,
-    ledger: "Ledger",
-    snap,
-    prev_schema: dict[str, str] | None,
-    cur_schema: dict[str, str],
-    output_dir: str,
-) -> bool:
-    """Report schema evolution when a run has NO data partitions to
-    validate — e.g. Iceberg ``ALTER TABLE ADD COLUMN`` creates no new
-    snapshot and touches no data files, so the planner's todo list is
-    empty, yet the evolution must not go unreported until some
-    unrelated commit forces a re-run. Appends the warning rows (with
-    a reserved run_seq) and advances the recorded schema; returns True
-    iff a change was recorded."""
-    from anomaly_detection_toolkit_spark.plans.checks import (
-        schema_diff,
-        schema_evolution_violations,
-    )
-
-    if prev_schema is None or not schema_diff(prev_schema, cur_schema):
-        return False
-    run_seq = ledger.reserve_run_seq()
-    evo = schema_evolution_violations(spark, prev_schema, cur_schema)
-    outputs = append_sinks(output_dir, {"violations": evo}, run_seq, str(snap))
-    # advance ONLY the schema baseline + run log — snapshot_id and
-    # completed_parts are the validation planner's bookkeeping and a
-    # metadata-only run must not disturb them
-    with ledger.edit() as state:
-        state["table_schema"] = cur_schema
-        state.setdefault("runs", []).append(
-            {"ts": time.time(), "run_seq": run_seq, "snapshot_id": snap,
-             "parts": [], "outputs": outputs,
-             "schema_only": True}
-        )
-    return True
-
-
 def run_job(
     spark: SparkSession,
     df: DataFrame,
@@ -654,42 +587,60 @@ def run_job(
     per-partition file hashes, parquet ``incremental`` runs) are
     recorded for the validated parts.
 
-    Returns None if nothing is left to validate at ``snap``."""
+    A run that validates nothing still records a snapshot advance (an
+    Iceberg ``replace``, a deleted partition) and reports a schema
+    change (an Iceberg ``ALTER TABLE``): both go through the same
+    reserved run_seq, sink append and ``Ledger.record`` as a
+    validation run. Returns None when no partition was validated."""
     ledger = Ledger(os.path.join(output_dir, "_ledger"))
     state = ledger.load()
-    delta = changed(state) if state["snapshot_id"] != snap else None
+    advanced = state["snapshot_id"] != snap
+    delta = changed(state) if advanced else None
     all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
     todo = Ledger.remaining_parts(state, snap, all_parts, delta)
     cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     prev_schema = state.get("table_schema")
-    if not todo:
-        # no data to (re-)validate — but an in-place schema change
-        # (Iceberg ALTER TABLE: no new data files, often no data
-        # commit) must still be reported and the baseline advanced
-        record_schema_only_change(
-            spark, ledger, snap, prev_schema, cur_schema, output_dir
-        )
+    evolved = prev_schema is not None and prev_schema != cur_schema
+    if not (todo or advanced or evolved):
         return None
-    result = run_suite(
-        df, checks or default_suite(), part_col=part_col, parts=todo,
-        violations_cap=violations_cap,
-    )
-    run_seq, outputs = append_run(
-        spark, ledger, output_dir, result, snap, prev_schema, cur_schema
-    )
+    result, frames = None, {}
+    if todo:
+        result = run_suite(
+            df, checks or default_suite(), part_col=part_col, parts=todo,
+            violations_cap=violations_cap,
+        )
+        frames = {
+            "verdicts": result.verdicts,
+            "violations": result.violations,
+            # a union of tiny per-check aggregates: one file per check
+            # partition (28 per default-suite run) unless REBALANCE
+            # lets AQE size the write from the bytes. Verdicts come
+            # out of an AQE-sized shuffle already; a rebalanced dense
+            # violations set wrote 3x the bytes with ~45% more CPU
+            # (docs/SCALE.md).
+            "metrics": result.metrics.hint("rebalance"),
+        }
+    if evolved:
+        evo = schema_evolution_violations(spark, prev_schema, cur_schema)
+        frames["violations"] = frames["violations"].unionByName(evo) if todo else evo
+    # reserved BEFORE any sink write: a crash mid-job can never lead to
+    # a reused run_seq in the history that history_drift scores
+    run_seq = ledger.reserve_run_seq()
+    outputs = append_sinks(output_dir, frames, run_seq, str(snap))
     ledger.record(
         snap,
-        result.parts_checked,
+        result.parts_checked if todo else [],
         outputs,
         changed=delta,
         fingerprints=fingerprints,
         table_schema=cur_schema,
         run_seq=run_seq,
     )
-    # outputs are materialized — release the shared narrow-projection
-    # cache (violations/metrics stay persisted for the caller)
-    for d in result.cached:
-        d.unpersist()
+    if todo:
+        # outputs are materialized — release the shared narrow-projection
+        # cache (violations/metrics stay persisted for the caller)
+        for d in result.cached:
+            d.unpersist()
     return result
 
 

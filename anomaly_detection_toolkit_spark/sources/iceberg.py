@@ -232,7 +232,6 @@ def changed_since(
     last_validated,
     current: int,
     part_col: str = "part",
-    skip_replace: bool = True,
 ) -> set[int] | None:
     """Partitions whose data changed moving ``last_validated → current``.
 
@@ -242,20 +241,17 @@ def changed_since(
     an Iceberg snapshot id (no ledger yet, or a parquet ledger's hex
     file-listing hash in the same output dir).
 
-    ``skip_replace`` (default True): snapshots with
-    ``operation = 'replace'`` — ``rewrite_data_files`` compaction —
-    rewrite files WITHOUT changing logical rows, and validation
-    depends only on logical content, so their file churn does not
-    mark partitions changed. Routine maintenance compaction of a
-    10^12-row table must not trigger mass re-validation. Pass False
-    to treat compaction as a change (e.g. when auditing the rewrite
-    itself)."""
+    Snapshots with ``operation = 'replace'`` — ``rewrite_data_files``
+    compaction — rewrite files WITHOUT changing logical rows, and
+    validation depends only on logical content, so their file churn
+    does not mark partitions changed. Routine maintenance compaction of
+    a 10^12-row table must not trigger mass re-validation."""
     if not isinstance(last_validated, int):
         return None
     delta = snapshots_between(snapshots_df, last_validated, current)
     if delta is None:
         return None
-    if skip_replace and delta:
+    if delta:
         ops = {
             int(r["snapshot_id"]): r["operation"]
             for r in snapshots_df.select("snapshot_id", "operation").collect()

@@ -55,7 +55,7 @@ def pmat(planted) -> np.ndarray:
 
 
 def drift_table(planted, **kw):
-    chk = DriftCheck(columns={"b": F.col("bucket_val")}, part_col="part", **kw)
+    chk = DriftCheck(columns={"b": F.col("bucket_val")}, **kw)
     out = chk.scores(planted)
     rows = {int(r["part"]): r for r in out.collect()}
     chk._last_counts.unpersist()
@@ -131,7 +131,6 @@ def test_default_drift_table_has_no_primitive_columns(planted):
 def test_primitive_violations_flag_planted_part(planted):
     chk = DriftCheck(
         columns={"b": F.col("bucket_val")},
-        part_col="part",
         ks_threshold=0.99,  # silence the KS gate; isolate the primitives
         z_threshold=2.0,
         iqr_k=1.5,
@@ -198,7 +197,6 @@ def test_rolling_window_of_one_rejected():
 def test_rolling_violation_messages_name_trailing_baseline(planted):
     chk = DriftCheck(
         columns={"b": F.col("bucket_val")},
-        part_col="part",
         ks_threshold=0.99,
         z_threshold=1.2,
         iqr_k=1.5,

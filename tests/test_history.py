@@ -346,30 +346,38 @@ def test_reserved_run_seq_never_reused_after_crash(spark, tmp_path):
 def test_schema_only_change_is_recorded_without_a_validation_run(spark, tmp_path):
     """Metadata-only evolution (Iceberg ALTER TABLE: no data commit,
     empty todo) still emits the warning rows and advances the
-    recorded schema, without touching the planner's bookkeeping."""
+    recorded schema, without touching the planner's bookkeeping; a
+    snapshot advance that changes no partition (Iceberg ``replace``)
+    moves the ledger to the new snapshot. Both go through ``run_job``'s
+    one record path."""
+    import os
+
     out = str(tmp_path / "out")
     led = R.Ledger(f"{out}/_ledger")
     state = led.load()
     state["snapshot_id"] = "snapA"
     state["completed_parts"] = [0, 1]
-    state["table_schema"] = {"a": "int", "b": "string"}
+    state["table_schema"] = {"a": "int", "b": "string", "part": "int"}
     led.save(state)
 
-    # no diff → no-op, nothing written
-    assert not R.record_schema_only_change(
-        spark, led, "snapA", {"a": "int", "b": "string"},
-        {"a": "int", "b": "string"}, out,
+    old = spark.createDataFrame([(1, "x", 0), (2, "y", 1)], "a int, b string, part int")
+    new = spark.createDataFrame(
+        [(1, "x", 2.0, 0), (2, "y", 3.0, 1)], "a bigint, b string, c double, part int"
     )
-    import os
 
+    def job(df, snap, changed=lambda state: None):
+        return R.run_job(
+            spark, df, snap, out, changed, checks=[C.SchemaCheck({"a": "int"})]
+        )
+
+    # no diff → no-op, nothing written
+    assert job(old, "snapA") is None
     assert not os.path.isdir(f"{out}/violations")
+    assert led.load()["runs"] == []
 
     # a retype + an add → violations appended with a reserved seq;
     # snapshot/completed_parts untouched
-    assert R.record_schema_only_change(
-        spark, led, "snapA", {"a": "int", "b": "string"},
-        {"a": "bigint", "b": "string", "c": "double"}, out,
-    )
+    assert job(new, "snapA") is None
     v = spark.read.parquet(f"{out}/violations").collect()
     assert {r["column"] for r in v} == {"a", "c"}
     assert all(r["check"] == "schema_evolution" and r["run_seq"] == 0 for r in v)
@@ -377,7 +385,22 @@ def test_schema_only_change_is_recorded_without_a_validation_run(spark, tmp_path
     assert state["snapshot_id"] == "snapA"
     assert state["completed_parts"] == [0, 1]
     assert state["table_schema"]["c"] == "double"
-    assert state["runs"][-1]["schema_only"] is True
+    assert state["runs"][-1]["parts"] == []
+
+    # a snapshot advance that changes no partition: nothing to
+    # validate, but the ledger moves to the new snapshot, keeping the
+    # completed parts; a rerun at it is a no-op
+    assert job(new, "snapB", lambda state: set()) is None
+    state = led.load()
+    assert state["snapshot_id"] == "snapB"
+    assert state["completed_parts"] == [0, 1]
+    assert [(r["run_seq"], r["snapshot_id"], r["parts"]) for r in state["runs"]] == [
+        (0, "snapA", []),
+        (1, "snapB", []),
+    ]
+    assert job(new, "snapB") is None
+    assert led.load()["runs"] == state["runs"]
+    assert spark.read.parquet(f"{out}/violations").count() == len(v)
 
 
 def test_history_drift_drops_pre_lineage_rows(spark):

@@ -247,17 +247,6 @@ def test_compaction_does_not_mark_partitions_changed(
         all_parts=[0, 3, 4],
     )
     assert todo == [4]
-    # opting out (auditing the rewrite itself) re-runs compacted parts
-    todo = plan(
-        expired_log,
-        expired_entries,
-        30,
-        50,
-        completed_parts=[0, 3],
-        all_parts=[0, 3, 4],
-        skip_replace=False,
-    )
-    assert todo == [0, 3, 4]
 
 
 def test_jar_status_self_reports(spark):

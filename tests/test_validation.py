@@ -241,6 +241,87 @@ def test_incremental_ledger_revalidates_only_changed_parts(spark, tmp_path):
     assert r4 is not None and r4.parts_checked == [0, 1, 2, 3, 4]
 
 
+def test_incremental_run_after_a_partition_is_deleted_advances_the_ledger(spark, tmp_path):
+    """Deleting a ``part=`` directory changes the snapshot but leaves
+    nothing to validate: the run still records the new snapshot and
+    drops the deleted partition from the completed parts and the
+    fingerprints, so the next run is a no-op."""
+    import shutil
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    images.write_images(spark, src, 600, n_parts=4)
+    suite = [C.ReferentialCheck()]
+
+    def run():
+        return R.run_validation_job(spark, src, out, checks=suite, incremental=True)
+
+    assert run().parts_checked == [0, 1, 2, 3]
+    shutil.rmtree(f"{src}/part=3")
+    assert run() is None
+    led = R.Ledger(f"{out}/_ledger")
+    state = led.load()
+    assert state["snapshot_id"] == R.snapshot_id(src)
+    assert state["completed_parts"] == [0, 1, 2]
+    assert set(state["part_fingerprints"]) == {"0", "1", "2"}
+    assert [r["parts"] for r in state["runs"]] == [[0, 1, 2, 3], []]
+    assert run() is None
+    assert led.load() == state
+
+
+def test_job_over_a_table_partitioned_by_another_column(spark, tmp_path):
+    """Every check reads ``part``; ``run_suite`` renames the table's own
+    partition column once, so a ``day``-partitioned copy yields the
+    verdict and violation rows of the ``part`` table."""
+    src, src_day = str(tmp_path / "src"), str(tmp_path / "src_day")
+    images.write_images(spark, src, 600, n_parts=4)
+    (
+        spark.read.parquet(src)
+        .withColumnRenamed("part", "day")
+        .write.partitionBy("day")
+        .parquet(src_day)
+    )
+    suite = C.default_suite()
+    ref = R.run_validation_job(spark, src, str(tmp_path / "out"), checks=suite)
+    day = R.run_validation_job(
+        spark, src_day, str(tmp_path / "out_day"), checks=suite,
+        part_col="day", incremental=True,
+    )
+    assert day.parts_checked == ref.parts_checked == [0, 1, 2, 3]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(day.verdicts) == rows(ref.verdicts)
+    assert rows(day.violations) == rows(ref.violations)
+    assert day.violations.filter(F.col("level") == "error").count() > 0
+    state = R.Ledger(str(tmp_path / "out_day" / "_ledger")).load()
+    assert set(state["part_fingerprints"]) == {"0", "1", "2", "3"}
+    # a second column named ``part`` would be ambiguous
+    both = spark.read.parquet(src_day).withColumn("part", F.lit(0))
+    with pytest.raises(ValueError, match="'part' column"):
+        R.run_suite(both, suite, part_col="day")
+
+
+def test_no_check_takes_part_col():
+    """Checks read the partition column as ``part``; only ``run_suite``
+    maps a table's own partition column onto it, so a check option
+    for it could disagree with the runner's."""
+    import inspect
+
+    def subclasses(cls):
+        for sub in cls.__subclasses__():
+            yield sub
+            yield from subclasses(sub)
+
+    checks = list(subclasses(C.Check))
+    assert len(checks) >= 7
+    offenders = [
+        c.__name__ for c in checks if "part_col" in inspect.signature(c.__init__).parameters
+    ]
+    assert not offenders, offenders
+
+
 def test_northstar_oracle_assumptions(spark):
     """Pin the two dataset-level facts the flagship's ground-truth
     DuckDB oracle (entry_suite._NORTHSTAR_SQL) relies on at the

@@ -39,7 +39,11 @@ def main(argv: list[str] | None = None) -> int:
         "name (catalog.db.table) with --format iceberg",
     )
     ap.add_argument("--output", required=True, help="output dir (verdicts/violations/metrics + ledger)")
-    ap.add_argument("--part-col", default="part")
+    ap.add_argument(
+        "--part-col",
+        default="part",
+        help="the table's partition column; checks and sinks call it `part`",
+    )
     ap.add_argument(
         "--format",
         choices=("parquet", "iceberg"),
@@ -203,56 +207,47 @@ def main(argv: list[str] | None = None) -> int:
     dt = time.perf_counter() - t0
     if result is None:
         print(f"nothing to do: snapshot already fully validated ({dt:.1f}s)")
-        # history drift only needs the EXISTING metrics sink — honor
-        # the flag even when no new validation ran
-        if args.history_drift:
-            _run_history_drift(spark, args)
         if args.quarantine:
             print(
                 "quarantine: skipped — needs a validation run's "
                 "violations (nothing was validated)"
             )
-        if args.clean_output:
-            # the ids come from the violations SINK, which exists from
-            # prior runs — a nothing-to-do rerun can still (re)write
-            # the clean view
-            _write_clean_output(spark, args)
-        if args.compact_sinks:
-            _compact(spark, args)
-        return 0
-    verdicts = result.verdicts.collect()
-    n_fail = sum(1 for r in verdicts if r["verdict"] == -1)
-    print(
-        f"validated parts={result.parts_checked} cells={len(verdicts)} "
-        f"failed_cells={n_fail} wall={dt:.1f}s outputs={args.output}"
-    )
-    for r in verdicts:
-        if r["verdict"] == -1:
-            print(f"  FAIL part={r['part']} check={r['check']} errors={r['n_errors']}")
-    if args.quarantine:
-        import os
-
-        from anomaly_detection_toolkit_spark.plans.runner import (
-            Ledger,
-            append_sinks,
-            quarantine_ids,
-        )
-
-        # tag the id list with the run that produced it (same lineage
-        # as the other sinks) so the dir can accumulate across runs
-        # without consumers anti-joining away ids from runs whose
-        # defects have since been fixed: read the NEWEST run's ids,
-        # not the whole dir
-        last = Ledger(os.path.join(args.output, "_ledger")).load()["runs"][-1]
-        qpath = os.path.join(args.output, "quarantine_ids")
-        ids = quarantine_ids(result.violations)
-        append_sinks(
-            args.output, {"quarantine_ids": ids}, int(last["run_seq"]), str(last["snapshot_id"])
-        )
+    else:
+        verdicts = result.verdicts.collect()
+        n_fail = sum(1 for r in verdicts if r["verdict"] == -1)
         print(
-            f"quarantine: {ids.count()} entity ids "
-            f"(run_seq={last['run_seq']}) -> {qpath}"
+            f"validated parts={result.parts_checked} cells={len(verdicts)} "
+            f"failed_cells={n_fail} wall={dt:.1f}s outputs={args.output}"
         )
+        for r in verdicts:
+            if r["verdict"] == -1:
+                print(f"  FAIL part={r['part']} check={r['check']} errors={r['n_errors']}")
+        if args.quarantine:
+            import os
+
+            from anomaly_detection_toolkit_spark.plans.runner import (
+                Ledger,
+                append_sinks,
+                quarantine_ids,
+            )
+
+            # tag the id list with the run that produced it (same lineage
+            # as the other sinks) so the dir can accumulate across runs
+            # without consumers anti-joining away ids from runs whose
+            # defects have since been fixed: read the NEWEST run's ids,
+            # not the whole dir
+            last = Ledger(os.path.join(args.output, "_ledger")).load()["runs"][-1]
+            qpath = os.path.join(args.output, "quarantine_ids")
+            ids = quarantine_ids(result.violations)
+            append_sinks(
+                args.output, {"quarantine_ids": ids}, int(last["run_seq"]), str(last["snapshot_id"])
+            )
+            print(
+                f"quarantine: {ids.count()} entity ids "
+                f"(run_seq={last['run_seq']}) -> {qpath}"
+            )
+    # the clean view and history drift read the SINKS, which exist from
+    # prior runs, so they also run when nothing new was validated
     if args.clean_output:
         _write_clean_output(spark, args)
     if args.history_drift:
