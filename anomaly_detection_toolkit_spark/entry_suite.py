@@ -377,10 +377,8 @@ def _suite_grid_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("suite_grid_documents", _SUITE_GRID_SQL)
-def suite_grid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real Check classes + run_suite() over a DuckDB-replicable
-    fact: column-stats constraints (n_chars max 500 breached by long
+def _suite_grid_checks() -> list:
+    """Column-stats constraints (n_chars max 500 breached by long
     docs), uniqueness on a unique key (passes) and a 16-bucket hash
     key (dup errors), caption→doc_key referential with injected
     orphans (doc_id % 17), and KS drift where part 0 is all-English
@@ -392,10 +390,8 @@ def suite_grid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         SchemaCheck,
         UniquenessCheck,
     )
-    from anomaly_detection_toolkit_spark.plans.runner import run_suite
 
-    fact = _suite_grid_fact(spark, sf_dir)
-    checks = [
+    return [
         SchemaCheck(
             {
                 "doc_key": "string",
@@ -428,7 +424,15 @@ def suite_grid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             ks_threshold=0.15,
         ),
     ]
-    result = run_suite(fact, checks)
+
+
+@register("suite_grid_documents", _SUITE_GRID_SQL)
+def suite_grid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The real Check classes + run_suite() over a DuckDB-replicable
+    fact (``_suite_grid_fact``, ``_suite_grid_checks``)."""
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    result = run_suite(_suite_grid_fact(spark, sf_dir), _suite_grid_checks())
     return result.verdicts.orderBy("part", "check")
 
 

@@ -44,10 +44,6 @@ def empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], VIOLATION_SCHEMA)
 
 
-def empty_metrics(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], METRICS_SCHEMA)
-
-
 @dataclass
 class CheckOutput:
     violations: DataFrame

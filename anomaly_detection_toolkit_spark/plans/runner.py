@@ -19,18 +19,21 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from anomaly_detection_toolkit_spark import versioned
 from anomaly_detection_toolkit_spark.plans.checks import (
+    METRICS_SCHEMA,
     Check,
     default_suite,
-    empty_metrics,
     empty_violations,
     schema_evolution_violations,
 )
@@ -44,7 +47,11 @@ class SuiteResult:
     violations: DataFrame
     metrics: DataFrame
     parts_checked: list[int]
+    # scratch caches (the shared narrow projection, the checks' own
+    # tables): ``run_job`` releases them once the sinks are written
     cached: tuple[DataFrame, ...] = ()
+    # the persisted per-check frames ``violations`` is the union of
+    violation_caches: tuple[DataFrame, ...] = ()
 
     def unpersist(self, blocking: bool = False) -> None:
         """Release every cache the suite run holds (call after the
@@ -59,7 +66,7 @@ class SuiteResult:
         (a 2M-image suite "ran" in 56s against 1037s of real work).
         ``blocking=True`` waits for block removal (deterministic tests).
         """
-        for d in (self.violations, self.metrics, *self.cached):
+        for d in (self.violations, *self.violation_caches, *self.cached):
             d.unpersist(blocking=blocking)
 
 
@@ -180,6 +187,71 @@ def clean_table(
     )
 
 
+def _on_threads(spark: SparkSession, fn: Callable, items: list) -> list[Future]:
+    """``fn(item)`` for every item, each on its own thread, waiting for
+    all of them; returns their futures in ``items`` order.
+
+    Each thread inherits the caller's Spark local properties (job group,
+    job description, scheduler pool): a plain thread would start its
+    jobs outside the caller's job group. The properties are copied once
+    per item, so a thread that sets its own job description does not
+    change another's."""
+    with ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
+        return [pool.submit(inheritable_thread_target(spark)(fn), x) for x in items]
+
+
+@dataclass
+class _CheckRun:
+    violations: DataFrame
+    cached: tuple[DataFrame, ...]
+    counts: dict[tuple[int, str], tuple[int, int]]
+    metric_rows: list[tuple]
+
+
+def _run_check(
+    check: Check, df: DataFrame, persist_violations: bool
+) -> _CheckRun:
+    """Plan one check, persist its violations (unless capped), and
+    collect its per-cell error/warning counts and its metric rows in
+    one job. The persisted violations serve that job, the violations
+    sink and any later consumer (quarantine) without re-running the
+    check. Releases what it persisted if the job fails."""
+    df.sparkSession.sparkContext.setJobDescription(f"adt:{check.name}")
+    out = check.run(df)
+    v, cached = out.violations, tuple(out.cached)
+    if persist_violations:
+        if not v.is_cached:
+            v = v.persist()
+        # a check that persists its own violations (payload,
+        # referential) hands that cache over to `violations`
+        cached = tuple(d for d in cached if d is not v)
+    counts_df = v.groupBy("check", "part").agg(
+        F.sum(F.when(F.col("level") == "error", 1).otherwise(0)).alias("n_errors"),
+        F.sum(F.when(F.col("level") == "warning", 1).otherwise(0)).alias("n_warnings"),
+    )
+    try:
+        rows = (
+            counts_df.withColumn("is_count", F.lit(True))
+            .unionByName(out.metrics, allowMissingColumns=True)
+            .collect()
+        )
+    except BaseException:
+        for d in (v, *cached):
+            d.unpersist()
+        raise
+    counts = {
+        (r["part"], r["check"]): (r["n_errors"], r["n_warnings"])
+        for r in rows
+        if r["is_count"]
+    }
+    metric_rows = [
+        (r["check"], r["part"], r["metric"], r["value"])
+        for r in rows
+        if not r["is_count"]
+    ]
+    return _CheckRun(v, cached, counts, metric_rows)
+
+
 def run_suite(
     df: DataFrame,
     checks: list[Check],
@@ -193,6 +265,13 @@ def run_suite(
     column (partition pruning on partitioned storage). Checks and sinks
     read the partition column as ``part``: a table partitioned by
     another ``part_col`` is renamed once here.
+
+    Each check plans and runs on its own thread (``_run_check``), so
+    the checks' planning and their small jobs overlap. The verdict grid
+    and the metrics are built on the driver from the rows those jobs
+    collect; ``violations`` is the union of the per-check frames. If a
+    check fails, the others finish, every cache the run made is
+    released and the first failure (in ``checks`` order) is raised.
     """
     spark = df.sparkSession
     if part_col != "part":
@@ -229,61 +308,66 @@ def run_suite(
         shared = df.select(*narrow_cols).persist()
         cached = (shared,)
 
-    # the distinct-parts collect doubles as the cache-materializing pass
+    # the distinct-parts collect doubles as the cache-materializing
+    # pass, before any check thread reads the shared cache
     all_parts = [r[0] for r in shared.select("part").distinct().collect()]
 
-    v_list, m_list = [], []
-    for check in checks:
-        out = check.run(df if check.needs_full_input else shared)
-        v_list.append(out.violations)
-        m_list.append(out.metrics)
-        cached = cached + tuple(out.cached)
-    # persist the (sparse) violation rows: they feed both the verdict
-    # grid aggregation and the violations sink — without this every
-    # consumer would re-run all checks against the full input.
-    # With violations_cap set, the FULL union is never persisted (in
-    # the pathological all-rows-failing case it is input-sized):
-    # verdict counts aggregate it in one map-side-partial pass served
-    # by the per-check caches, and only the capped exemplars persist.
-    violations_full = _union_all(v_list, empty_violations(spark))
+    # With violations_cap set, the FULL per-check violations are never
+    # persisted (in the pathological all-rows-failing case they are
+    # input-sized): their counts aggregate map-side, served by the
+    # checks' own caches, and only the capped exemplars persist.
+    runs = _on_threads(
+        spark,
+        lambda c: _run_check(
+            c, df if c.needs_full_input else shared, violations_cap is None
+        ),
+        checks,
+    )
+    done = [f.result() for f in runs if f.exception() is None]
+    failed = [f.exception() for f in runs if f.exception() is not None]
+    if failed:
+        for d in (*cached, *(d for r in done for d in (r.violations, *r.cached))):
+            d.unpersist()
+        raise failed[0]
+    for r in done:
+        cached += r.cached
+
+    violations = _union_all([r.violations for r in done], empty_violations(spark))
+    violation_caches: tuple[DataFrame, ...] = ()
     if violations_cap is None:
-        violations = violations_full.persist()
-        counts_src = violations
+        violation_caches = tuple(r.violations for r in done)
     else:
-        counts_src = violations_full
-        violations = cap_violations(violations_full, violations_cap).persist()
-    # metrics are small aggregated rows, but their lineage re-runs the
-    # per-check aggregations — persist so the metrics sink write and
-    # any later consumer compute them once
-    metrics = _union_all(m_list, empty_metrics(spark)).persist()
+        violations = cap_violations(violations, violations_cap).persist()
 
     # verdict grid: every (part, check) cell, failed iff >=1 error —
-    # counts always come from the FULL violation set, never the cap
-    counts = counts_src.groupBy("part", "check").agg(
-        F.sum(F.when(F.col("level") == "error", 1).otherwise(0)).alias("n_errors"),
-        F.sum(F.when(F.col("level") == "warning", 1).otherwise(0)).alias("n_warnings"),
-    )
-    # build the (part × check) grid driver-side as a pure-JVM literal
-    # relation: createDataFrame would pickle it into a Python RDD whose
-    # coalesce(1) iterates every slice through ONE worker sequentially
-    # — measured 4.9s PER ACTION for a 224-cell grid (a quarter of the
-    # 100k-image suite wall); the literal form is milliseconds
+    # counts always come from the FULL violation set, never the cap.
+    # Only validated parts are cells: a violation at any other part
+    # (-1: a global one) reaches the violations sink, not the grid.
+    n_err, n_warn = Counter(), Counter()
+    for r in done:
+        for cell, (e, w) in r.counts.items():
+            n_err[cell] += e
+            n_warn[cell] += w
+    # driver-built literal relations (local_rows_df): no join, no
+    # shuffle and no Python worker behind either table
     from anomaly_detection_toolkit_spark.functions.localrel import local_rows_df
 
-    grid_rows = [(int(p), c.name) for p in all_parts for c in checks]
-    grid = local_rows_df(spark, grid_rows, "part int, check string")
-    verdicts = (
-        grid.join(counts, ["part", "check"], "left")
-        .withColumn("n_errors", F.coalesce(F.col("n_errors"), F.lit(0)).cast("long"))
-        .withColumn("n_warnings", F.coalesce(F.col("n_warnings"), F.lit(0)).cast("long"))
-        .withColumn(
-            "verdict", F.when(F.col("n_errors") > 0, F.lit(-1)).otherwise(F.lit(1)).cast("int")
-        )
+    cells = [(int(p), c.name) for p in all_parts for c in checks]
+    verdicts = local_rows_df(
+        spark,
+        [(*k, n_err[k], n_warn[k], -1 if n_err[k] > 0 else 1) for k in cells],
+        VERDICT_SCHEMA,
     )
-    # global (part = -1) violations fail every listed partition's cell?
-    # No — they are reported per check at part=-1 in the verdict table.
+    metrics = local_rows_df(
+        spark, [m for r in done for m in r.metric_rows], METRICS_SCHEMA
+    )
     return SuiteResult(
-        verdicts, violations, metrics, sorted(int(p) for p in all_parts), cached
+        verdicts,
+        violations,
+        metrics,
+        sorted(int(p) for p in all_parts),
+        cached,
+        violation_caches,
     )
 
 
@@ -464,7 +548,18 @@ def append_sinks(
     """Append each frame to sink ``<output_dir>/<name>`` (tagged with
     the run's lineage when ``run_seq`` is given); returns the paths.
     All sink locks are taken before the first write, so a concurrent
-    compaction fails this call before any row lands."""
+    compaction fails this call before any row lands. The frames are
+    written concurrently, each on its own thread; the first failed
+    write (in ``frames`` order) is raised once all have finished."""
+
+    def write(item: tuple[str, DataFrame]) -> None:
+        name, df = item
+        if run_seq is not None:
+            df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
+                "snapshot_id", F.lit(snapshot_id).cast("string")
+            )
+        df.write.mode("append").parquet(dirs[name])
+
     with ExitStack() as stack:
         dirs = {
             name: stack.enter_context(
@@ -472,12 +567,10 @@ def append_sinks(
             )
             for name in frames
         }
-        for name, df in frames.items():
-            if run_seq is not None:
-                df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
-                    "snapshot_id", F.lit(snapshot_id).cast("string")
-                )
-            df.write.mode("append").parquet(dirs[name])
+        if frames:
+            spark = next(iter(frames.values())).sparkSession
+            for f in _on_threads(spark, write, list(frames.items())):
+                f.result()
     return {name: os.path.join(output_dir, name) for name in frames}
 
 
@@ -612,13 +705,7 @@ def run_job(
         frames = {
             "verdicts": result.verdicts,
             "violations": result.violations,
-            # a union of tiny per-check aggregates: one file per check
-            # partition (28 per default-suite run) unless REBALANCE
-            # lets AQE size the write from the bytes. Verdicts come
-            # out of an AQE-sized shuffle already; a rebalanced dense
-            # violations set wrote 3x the bytes with ~45% more CPU
-            # (docs/SCALE.md).
-            "metrics": result.metrics.hint("rebalance"),
+            "metrics": result.metrics,
         }
     if evolved:
         evo = schema_evolution_violations(spark, prev_schema, cur_schema)
@@ -637,8 +724,8 @@ def run_job(
         run_seq=run_seq,
     )
     if todo:
-        # outputs are materialized — release the shared narrow-projection
-        # cache (violations/metrics stay persisted for the caller)
+        # outputs are materialized — release the scratch caches
+        # (violations stay persisted for the caller)
         for d in result.cached:
             d.unpersist()
     return result

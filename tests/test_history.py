@@ -245,8 +245,7 @@ def test_quarantine_and_clean_table(spark, tmp_path):
     # id-table input path accepted too (extra columns tolerated)
     pre = R.quarantine_ids(result.violations).withColumn("reason", F.lit("x"))
     assert R.clean_table(df, pre).count() == cleaned.count()
-    for d in (result.violations, result.metrics, *result.cached):
-        d.unpersist()
+    result.unpersist()
 
 
 def test_clean_table_broadcasts_the_id_side(spark, tmp_path):

@@ -229,23 +229,33 @@ def test_suite_grid_documents_feeds_checks_from_cache(spark):
     """The oracle-checked suite grid: every check's violation subtree
     must read the persisted fact (InMemoryTableScan), never re-scan
     the documents parquet — the same one-pass cost model as the image
-    suite, pinned on the DuckDB-replicable path."""
-    from anomaly_detection_toolkit_spark.entry_suite import suite_grid_documents
+    suite, pinned on the DuckDB-replicable path. The grid itself is
+    driver-built, so the check subtrees are read off the run's
+    violations."""
+    from anomaly_detection_toolkit_spark.entry_suite import (
+        _suite_grid_checks,
+        _suite_grid_fact,
+    )
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
 
-    out = suite_grid_documents(spark, "/root/testdata/sf0.001")
-    plan = plan_of(out)
-    # the parquet appears once (the cache-materializing scan lineage);
-    # check subtrees read InMemoryTableScans
-    assert plan.count("InMemoryTableScan") >= 4
-    rows = out.collect()
-    checks = {r.check for r in rows}
-    assert checks == {
-        "schema", "column_stats", "uniqueness_doc_key",
-        "uniqueness_phash16", "referential_caption", "drift",
-    }
-    # non-trivial grid: failures AND passes both present
-    verds = {r.verdict for r in rows}
-    assert verds == {-1, 1}
+    result = run_suite(
+        _suite_grid_fact(spark, "/root/testdata/sf0.001"), _suite_grid_checks()
+    )
+    try:
+        # the parquet appears once (the cache-materializing scan
+        # lineage); check subtrees read InMemoryTableScans
+        assert plan_of(result.violations).count("InMemoryTableScan") >= 4
+        rows = result.verdicts.collect()
+        checks = {r.check for r in rows}
+        assert checks == {
+            "schema", "column_stats", "uniqueness_doc_key",
+            "uniqueness_phash16", "referential_caption", "drift",
+        }
+        # non-trivial grid: failures AND passes both present
+        verds = {r.verdict for r in rows}
+        assert verds == {-1, 1}
+    finally:
+        result.unpersist()
 
 
 def test_check_metrics_read_their_violation_caches(spark, tmp_path):
@@ -276,42 +286,255 @@ def test_check_metrics_read_their_violation_caches(spark, tmp_path):
                 c.unpersist()
 
 
-def test_suite_unpersist_releases_every_cache(spark, tmp_path):
-    """SuiteResult.unpersist() must return the block manager to its
-    pre-run state. If any per-check persist survives, the NEXT
-    plan-identical run_suite resolves its persists to the
-    already-materialized InMemoryRelations and silently skips the
-    heavy stages — which turned the round-3 scaling benchmark into a
-    cache-hot partial measurement (2M N=2: run1 1037s, run2 56s)
-    until tools/scaling_bench.py switched to res.unpersist(). The
-    fused loop the bench tools share, ``bench.suite_times``, must
-    leave the same state behind."""
-    import bench
-    from anomaly_detection_toolkit_spark.plans.checks import default_suite
-    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+def _persisted_rdd_ids(spark) -> set:
+    """Ids of the RDDs the context holds as persisted. Unpersisting
+    removes an id at once (the block removal itself may be async)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _image_table(spark, tmp_path, n=300, n_parts=3):
     from anomaly_detection_toolkit_spark.sources import images
 
     d = str(tmp_path / "imgs")
-    images.write_images(spark, d, 300, n_parts=3)
-    df = spark.read.parquet(d)
+    images.write_images(spark, d, n, n_parts=n_parts)
+    return spark.read.parquet(d)
 
-    def cached_rdd_ids() -> set:
-        return {
-            info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
 
-    before = cached_rdd_ids()
-    res = run_suite(df, default_suite())
+def test_suite_unpersist_releases_every_cache(spark, tmp_path):
+    """SuiteResult.unpersist() must release every cache the run made.
+    If any per-check persist survives, the NEXT plan-identical
+    run_suite resolves its persists to the already-materialized
+    InMemoryRelations and silently skips the heavy stages — which
+    turned the round-3 scaling benchmark into a cache-hot partial
+    measurement (2M N=2: run1 1037s, run2 56s) until
+    tools/scaling_bench.py switched to res.unpersist(). The fused loop
+    the bench tools share, ``bench.suite_times``, must leave nothing
+    behind either.
+
+    Only the run's OWN ids are compared: an earlier test's cache may be
+    released (the context cleaner drops a collected RDD) while this
+    runs."""
+    import bench
+    from anomaly_detection_toolkit_spark.plans.checks import V_COLS, default_suite
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    df = _image_table(spark, tmp_path)
+    before = _persisted_rdd_ids(spark)
+    suite = default_suite()
+    res = run_suite(df, suite)
     for out in (res.violations, res.verdicts, res.metrics):
         out.write.format("noop").mode("overwrite").save()
-    assert cached_rdd_ids() - before, "suite should persist intermediates"
+    new = _persisted_rdd_ids(spark) - before
+    assert new, "suite should persist intermediates"
+    # every check's violations are a cache the result holds
+    assert len(res.violation_caches) == len(suite)
+    assert all(c.columns == V_COLS and c.is_cached for c in res.violation_caches)
     res.unpersist(blocking=True)
-    leaked = cached_rdd_ids() - before
+    leaked = _persisted_rdd_ids(spark) & new
     assert not leaked, f"persisted RDDs leaked past unpersist: {leaked}"
 
-    before = cached_rdd_ids()
+    before = _persisted_rdd_ids(spark)
     bench.suite_times(df, runs=2)
-    assert cached_rdd_ids() == before
+    leaked = _persisted_rdd_ids(spark) - before
+    assert not leaked, f"persisted RDDs leaked past suite_times: {leaked}"
+
+
+def test_suite_jobs_run_in_the_callers_job_group(spark, tmp_path):
+    """Every job of a suite run lands in the caller's job group (the
+    check threads inherit it), and each check names its jobs
+    ``adt:<check>`` — the per-check attribution of a fused run."""
+    from anomaly_detection_toolkit_spark.plans.checks import default_suite
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
+
+    def jobs() -> dict:
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        seq = store.jobsList(None)  # a Scala Seq
+        return {j.jobId(): j for j in map(seq.apply, range(seq.size()))}
+
+    df = _image_table(spark, tmp_path, 200, 2)
+    before = set(jobs())
+    suite = default_suite()
+    sc.setJobGroup("suite-under-test", "suite-under-test", False)
+    try:
+        res = run_suite(df, suite)
+    finally:
+        sc._jsc.clearJobGroup()
+    try:
+        ran = [j for i, j in jobs().items() if i not in before]
+        assert ran
+        groups = {j.jobGroup().get() if j.jobGroup().isDefined() else None for j in ran}
+        assert groups == {"suite-under-test"}
+        descriptions = {j.description().get() for j in ran if j.description().isDefined()}
+        assert {f"adt:{c.name}" for c in suite} <= descriptions
+    finally:
+        res.unpersist(blocking=True)
+
+
+@pytest.mark.parametrize("when", ["plan", "run"])
+def test_suite_check_failure_raises_and_releases_caches(spark, tmp_path, when):
+    """A check that fails while planning or while its job runs: the
+    other checks finish, run_suite raises that check's error, and no
+    cache the run made survives."""
+    from anomaly_detection_toolkit_spark.functions.localrel import local_rows_df
+    from anomaly_detection_toolkit_spark.plans.checks import (
+        METRICS_SCHEMA,
+        VIOLATION_SCHEMA,
+        Check,
+        CheckOutput,
+        default_suite,
+    )
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    class Broken(Check):
+        name = "broken"
+
+        def run(self, df):
+            if when == "plan":
+                raise ValueError("broken check")
+            row = ("broken", "error", None, None, 0, None, None, "m")
+            v = local_rows_df(spark, [row], VIOLATION_SCHEMA).withColumn(
+                "value", F.raise_error(F.lit("broken check")).cast("string")
+            )
+            return CheckOutput(v, local_rows_df(spark, [], METRICS_SCHEMA))
+
+    df = _image_table(spark, tmp_path, 200, 2)
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(Exception, match="broken check"):
+        run_suite(df, [*default_suite(), Broken()])
+    assert not _persisted_rdd_ids(spark) - before
+
+
+def test_suite_outputs_do_not_depend_on_partitioning_confs(spark, tmp_path):
+    """Sorted verdict, violation and metric rows are the same whether
+    AQE may re-partition cached plans or not, and at 1 or 8 shuffle
+    partitions."""
+    import itertools
+
+    from anomaly_detection_toolkit_spark.plans.checks import default_suite
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    df = _image_table(spark, tmp_path)
+    keys = (
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "spark.sql.shuffle.partitions",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    got = {}
+    try:
+        for conf in itertools.product(("false", "true"), ("1", "8")):
+            for k, v in zip(keys, conf):
+                spark.conf.set(k, v)
+            res = run_suite(df, default_suite())
+            got[conf] = [
+                sorted(map(tuple, out.collect()), key=repr)
+                for out in (res.verdicts, res.violations, res.metrics)
+            ]
+            res.unpersist(blocking=True)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    first = got[("true", "8")]
+    assert all(len(rows) > 0 for rows in first)
+    for conf, outs in got.items():
+        assert outs == first, conf
+
+
+def test_suite_verdicts_and_metrics_are_driver_built(spark, tmp_path):
+    """The verdict grid and the metrics are literal relations built
+    from the checks' collected rows: no join, no shuffle and no
+    pickled Python RDD behind them."""
+    from anomaly_detection_toolkit_spark.plans.checks import default_suite
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    res = run_suite(_image_table(spark, tmp_path, 200, 2), default_suite())
+    try:
+        for out in (res.verdicts, res.metrics):
+            plan = plan_of(out)
+            assert "Exchange" not in plan and "ExistingRDD" not in plan, plan
+        assert res.verdicts.count() == 2 * len(default_suite())
+    finally:
+        res.unpersist(blocking=True)
+
+
+def _unwrapped_threads(source: str) -> list[int]:
+    """Lines of ``source`` that start a thread whose target is not
+    wrapped in ``inheritable_thread_target``: a ``Thread(...)`` call,
+    a ``ThreadPoolExecutor(...)`` not bound to a name, or a submit/map
+    on a bound pool."""
+    import ast
+
+    def wrapped(node) -> bool:
+        while isinstance(node, ast.Call):  # f(...)(...) curries
+            f = node.func
+            if getattr(f, "id", getattr(f, "attr", None)) == "inheritable_thread_target":
+                return True
+            node = f
+        return False
+
+    def name(call) -> str | None:
+        return getattr(call.func, "id", getattr(call.func, "attr", None))
+
+    tree = ast.parse(source)
+    pools, bound, bad = set(), set(), []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.withitem):
+            call, targets = node.context_expr, [node.optional_vars]
+        elif isinstance(node, ast.Assign):
+            call, targets = node.value, node.targets
+        else:
+            continue
+        if isinstance(call, ast.Call) and name(call) == "ThreadPoolExecutor":
+            bound.add(id(call))
+            pools |= {t.id for t in targets if isinstance(t, ast.Name)}
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        if name(node) == "Thread":
+            target = next((k.value for k in node.keywords if k.arg == "target"), None)
+            if not wrapped(target):
+                bad.append(node.lineno)
+        elif name(node) == "ThreadPoolExecutor" and id(node) not in bound:
+            bad.append(node.lineno)
+        elif (
+            isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("submit", "map")
+            and getattr(node.func.value, "id", None) in pools
+            and not (node.args and wrapped(node.args[0]))
+        ):
+            bad.append(node.lineno)
+    return bad
+
+
+def test_engine_threads_inherit_spark_local_properties():
+    """Every engine thread runs a target wrapped in
+    ``inheritable_thread_target`` (or is an ``InheritableThread``). A
+    plain thread starts its jobs without the caller's job group, so
+    figures read per job group (perfbench's traced runs) silently lose
+    those jobs."""
+    from pathlib import Path
+
+    assert _unwrapped_threads("import threading\nthreading.Thread(target=f).start()")
+    assert _unwrapped_threads(
+        "with ThreadPoolExecutor(2) as pool:\n    pool.submit(f, 1)"
+    )
+    assert not _unwrapped_threads(
+        "with ThreadPoolExecutor(2) as pool:\n"
+        "    pool.submit(inheritable_thread_target(spark)(f), 1)\n"
+        "Thread(target=inheritable_thread_target(f))\n"
+        "InheritableThread(target=f)"
+    )
+    repo = Path(__file__).resolve().parent.parent
+    pkg = repo / "anomaly_detection_toolkit_spark"
+    offenders = [
+        f"{p.relative_to(repo)}:{line}"
+        for p in pkg.rglob("*.py")
+        for line in _unwrapped_threads(p.read_text())
+    ]
+    assert not offenders, offenders
 
 
 def test_violations_cap_bounds_exemplars_keeps_exact_counts(spark, tmp_path):
