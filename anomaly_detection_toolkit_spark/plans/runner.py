@@ -21,7 +21,7 @@ import os
 import time
 from collections import Counter
 from collections.abc import Callable
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
@@ -187,19 +187,6 @@ def clean_table(
     )
 
 
-def _on_threads(spark: SparkSession, fn: Callable, items: list) -> list[Future]:
-    """``fn(item)`` for every item, each on its own thread, waiting for
-    all of them; returns their futures in ``items`` order.
-
-    Each thread inherits the caller's Spark local properties (job group,
-    job description, scheduler pool): a plain thread would start its
-    jobs outside the caller's job group. The properties are copied once
-    per item, so a thread that sets its own job description does not
-    change another's."""
-    with ThreadPoolExecutor(max_workers=max(1, len(items))) as pool:
-        return [pool.submit(inheritable_thread_target(spark)(fn), x) for x in items]
-
-
 @dataclass
 class _CheckRun:
     violations: DataFrame
@@ -316,13 +303,19 @@ def run_suite(
     # persisted (in the pathological all-rows-failing case they are
     # input-sized): their counts aggregate map-side, served by the
     # checks' own caches, and only the capped exemplars persist.
-    runs = _on_threads(
-        spark,
-        lambda c: _run_check(
+    #
+    # Each thread inherits the caller's Spark local properties (job
+    # group, job description, scheduler pool): a plain thread would
+    # start its jobs outside the caller's job group. The properties are
+    # copied once per check, so a check setting its own job description
+    # does not change another's.
+    def run(c: Check) -> _CheckRun:
+        return _run_check(
             c, df if c.needs_full_input else shared, violations_cap is None
-        ),
-        checks,
-    )
+        )
+
+    with ThreadPoolExecutor(max_workers=max(1, len(checks))) as pool:
+        runs = [pool.submit(inheritable_thread_target(spark)(run), c) for c in checks]
     done = [f.result() for f in runs if f.exception() is None]
     failed = [f.exception() for f in runs if f.exception() is not None]
     if failed:
@@ -548,18 +541,7 @@ def append_sinks(
     """Append each frame to sink ``<output_dir>/<name>`` (tagged with
     the run's lineage when ``run_seq`` is given); returns the paths.
     All sink locks are taken before the first write, so a concurrent
-    compaction fails this call before any row lands. The frames are
-    written concurrently, each on its own thread; the first failed
-    write (in ``frames`` order) is raised once all have finished."""
-
-    def write(item: tuple[str, DataFrame]) -> None:
-        name, df = item
-        if run_seq is not None:
-            df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
-                "snapshot_id", F.lit(snapshot_id).cast("string")
-            )
-        df.write.mode("append").parquet(dirs[name])
-
+    compaction fails this call before any row lands."""
     with ExitStack() as stack:
         dirs = {
             name: stack.enter_context(
@@ -567,10 +549,12 @@ def append_sinks(
             )
             for name in frames
         }
-        if frames:
-            spark = next(iter(frames.values())).sparkSession
-            for f in _on_threads(spark, write, list(frames.items())):
-                f.result()
+        for name, df in frames.items():
+            if run_seq is not None:
+                df = df.withColumn("run_seq", F.lit(run_seq)).withColumn(
+                    "snapshot_id", F.lit(snapshot_id).cast("string")
+                )
+            df.write.mode("append").parquet(dirs[name])
     return {name: os.path.join(output_dir, name) for name in frames}
 
 

@@ -54,6 +54,28 @@ def test_plan_has_no_python_rdd_scan(spark):
     assert df.count() == 224
 
 
+def test_rows_past_the_literal_bound_become_a_scan(spark, monkeypatch):
+    """Past ``MAX_LITERAL_ROWS`` the rows go through createDataFrame (a
+    scan spread over the cluster, not one task parsing one literal),
+    with the same values, NaN and NULL included."""
+    from anomaly_detection_toolkit_spark.functions import localrel
+
+    rows = [(p, f"m{p % 3}", p / 7, None) for p in range(40)]
+    rows[5] = (5, "m2", float("nan"), 1.5)
+    ddl = "part int, metric string, value double, e double"
+    lit = local_rows_df(spark, rows, ddl)
+    monkeypatch.setattr(localrel, "MAX_LITERAL_ROWS", len(rows) - 1)
+    scan = local_rows_df(spark, rows, ddl)
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan
+    assert scan.schema == lit.schema
+    key = lambda r: r[0]  # noqa: E731
+    got, want = sorted(scan.collect(), key=key), sorted(lit.collect(), key=key)
+    assert math.isnan(got[5].value) and math.isnan(want[5].value)
+    assert [r for r in got if r.part != 5] == [r for r in want if r.part != 5]
+    assert tuple(got[5])[:2] + tuple(got[5])[3:] == (5, "m2", 1.5)
+
+
 def test_runner_grid_is_jvm_local(spark, sf_unit):
     """The suite verdict grid (the original 4.9s/action offender) must
     come out of run_suite as a JVM-local relation."""
