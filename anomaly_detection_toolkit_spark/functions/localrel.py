@@ -1,50 +1,35 @@
 """Driver-literal rows as a pure-JVM LocalRelation.
 
-``spark.createDataFrame(rows, ...)`` routes tiny driver-side tables
-through a pickled Python RDD: every action re-deserializes the rows in
-executor Python workers (~0.4 s warm for a 1-row table here), and a
-``coalesce(1)`` on top iterates all parent slices through ONE worker
-sequentially (measured 4.9 s per action for the 224-row suite verdict
-grid — paid on every suite run).
+``spark.createDataFrame(rows, ...)`` on a Python list routes tiny
+driver-side tables through a pickled Python RDD: every action
+re-deserializes the rows in executor Python workers (~0.4 s warm for a
+1-row table here), and a ``coalesce(1)`` on top iterates all parent
+slices through ONE worker sequentially (measured 4.9 s per action for
+the 224-row suite verdict grid — paid on every suite run).
 
-Emitting the rows JVM-side avoids the Python workers entirely. Doing
-it as per-cell ``struct(lit(...))`` literals is still slow to BUILD
-(one py4j round-trip per cell: 2.8 s for 224×2 cells), so the rows
-travel as ONE ``from_json`` literal instead — a single py4j call
-whose JSON parse happens once in the JVM; actions cost milliseconds.
+``createDataFrame`` on a ``pyarrow.Table`` instead ships the rows to the
+JVM once as Arrow batches and plans a ``LocalRelation`` (a
+``LocalTableScan``, sliced over the default parallelism; past
+``spark.sql.execution.arrow.localRelationThreshold`` bytes, 48 MB by
+default, an RDD of Arrow batches that the JVM decodes). No Python
+worker runs at any size, with Arrow execution enabled or not. The table
+is built column-wise from the DDL's Arrow schema: ``pa.array`` keeps
+every double exact and NaN/±inf as values (the pandas route would turn
+NaN into NULL), and a value outside its column type raises
+``ArrowInvalid`` instead of wrapping.
 
 Intended for driver-known tables of plain scalars (verdict grids,
-metric rows, per-partition offsets, scalar results): the JSON travels
-inside the plan and one task parses it, so cost grows linearly with
-the rows and runs on one core. Measured on a 4-core host with 4-column
-metric rows (build + parquet write): 30k rows 0.68 s literal vs 0.67 s
-``createDataFrame``; 100k rows 1.79 s vs 1.44 s; 300k rows 4.99 s vs
-2.26 s. Above ``MAX_LITERAL_ROWS`` the rows therefore go through
-``createDataFrame`` instead: a pickled scan split over the cluster's
-default parallelism, whose per-action Python worker cost no longer
-dominates at that size. A suite run reaches it with its metric rows
-(about 28 per partition for the default suite, so a first full run
-over ~1,800 partitions and up).
+metric rows, per-partition offsets, scalar results).
 """
 
 from __future__ import annotations
 
-import json
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
-
-# where the one-task JSON literal stops being the cheaper path (see the
-# module docstring's measurements)
-MAX_LITERAL_ROWS = 50_000
-
-
-def _one_row_range(spark: SparkSession):
-    # one explicit partition: a bare range(1) inherits 32 splits (31
-    # empty tasks of pure scheduling overhead per action)
-    return spark.range(0, 1, 1, 1)
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def local_rows_df(
@@ -52,22 +37,11 @@ def local_rows_df(
 ) -> DataFrame:
     """Build a DataFrame of literal ``rows`` (tuples of plain Python
     scalars; ``None`` allowed) with the DDL ``schema_ddl``, as a JVM
-    LocalRelation instead of a pickled-RDD scan.
-
-    Empty ``rows`` falls back to ``createDataFrame([], ...)`` which is
-    already a (rowless) LocalRelation — no Python workers either. More
-    than ``MAX_LITERAL_ROWS`` rows go through ``createDataFrame`` too,
-    as a scan spread over the cluster.
-    """
-    struct_t = StructType.fromDDL(schema_ddl)
-    if not rows or len(rows) > MAX_LITERAL_ROWS:
-        return spark.createDataFrame(list(rows), struct_t)
-    names = [f.name for f in struct_t.fields]
-    # JSON round-trips every finite double exactly (repr is
-    # shortest-round-trip), ints and strings trivially; NaN/±inf go out
-    # as the bare tokens NaN/Infinity/-Infinity, which from_json reads
-    # back (allowNonNumericNumbers is on by default)
-    payload = json.dumps([dict(zip(names, row)) for row in rows])
-    return _one_row_range(spark).select(
-        F.inline(F.from_json(F.lit(payload), ArrayType(struct_t)))
+    LocalRelation instead of a pickled-RDD scan."""
+    schema = to_arrow_schema(StructType.fromDDL(schema_ddl))
+    columns = zip(*rows) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(values, f.type) for values, f in zip(columns, schema)],
+        schema=schema,
     )
+    return spark.createDataFrame(table)

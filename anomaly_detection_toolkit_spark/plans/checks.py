@@ -41,7 +41,7 @@ V_COLS = ["check", "level", "column", "entity_id", "part", "value", "threshold",
 
 
 def empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
+    return local_rows_df(spark, [], VIOLATION_SCHEMA)
 
 
 @dataclass
@@ -370,12 +370,15 @@ class UniquenessCheck(Check):
         key = self.key_col
         keys = df.groupBy(key).agg(F.count(F.lit(1)).alias("key_count"))
         # persist the dup-key dim table (tiny by construction — real
-        # duplicate keys only): violations and metrics materialize as
-        # separate runner jobs, and the full-cardinality key shuffle —
-        # the suite's biggest exchange — must run ONCE, not once per
-        # consumer. n_keys is derived by approx_count_distinct in the
-        # same narrow pass (mergeable HLL partials, NO key shuffle)
-        # instead of re-aggregating 10^12 keys exactly for a metric.
+        # duplicate keys only): both outputs read it — in the runner's
+        # one collect job its violations and metrics branches, and for
+        # a standalone ``run`` caller (perfbench probes,
+        # tools/suite_stress.py) two separate jobs — and the
+        # full-cardinality key shuffle, the suite's biggest exchange,
+        # must run ONCE, not once per consumer. n_keys is derived by
+        # approx_count_distinct in the same narrow pass (mergeable HLL
+        # partials, NO key shuffle) instead of re-aggregating 10^12
+        # keys exactly for a metric.
         dup_keys = keys.filter(F.col("key_count") > 1).persist()
         violations = (
             df.select(key, self.entity_col, "part")
@@ -444,9 +447,12 @@ class ReferentialCheck(Check):
         )
         ids = df.select(F.col(self.ref_col).alias("ref_id")).distinct()
         orphans = referenced.filter(F.col("ref_id") != "").join(ids, "ref_id", "left_anti")
-        # persist the SPARSE orphan rows: violations and metrics are
-        # materialized separately by the runner, and an unpersisted
-        # plan would run the big-big anti-join twice
+        # persist the SPARSE orphan rows: the metric counts them, so
+        # the runner's one collect job reads them twice (counts and
+        # metrics branches) and keeps this cache as the check's
+        # violations; a standalone ``run`` caller materializes
+        # violations and metrics as separate jobs. Unpersisted, the
+        # big-big anti-join would run once per read
         violations = orphans.select(
             *_v(
                 self.name,
@@ -563,11 +569,14 @@ class PayloadCheck(Check):
                     {c: pd.Series(dtype=object) for c in V_COLS}
                 )
 
-        # persist the SPARSE violation rows: the runner materializes
-        # violations and metrics as separate jobs, and the metrics
-        # lineage would otherwise RE-DECODE every payload — the single
-        # most expensive stage in the suite, paid twice (caught by the
-        # round-3 per-check profile: 7.1s → 3.6s at 100k images)
+        # persist the SPARSE violation rows: the metrics count them,
+        # so the runner's one collect job reads them twice (counts and
+        # metrics branches) and keeps this cache as the check's
+        # violations; a standalone ``run`` caller materializes
+        # violations and metrics as separate jobs. Unpersisted, each
+        # read would RE-DECODE every payload — the single most
+        # expensive stage in the suite (caught by the round-3
+        # per-check profile: 7.1s → 3.6s at 100k images)
         violations = cols.mapInPandas(check_batch, schema=VIOLATION_SCHEMA).persist()
         metrics = violations.groupBy("part").agg(F.count(F.lit(1)).alias("n")).select(
             F.lit(name).alias("check"),

@@ -50,7 +50,8 @@ class SuiteResult:
     # scratch caches (the shared narrow projection, the checks' own
     # tables): ``run_job`` releases them once the sinks are written
     cached: tuple[DataFrame, ...] = ()
-    # the persisted per-check frames ``violations`` is the union of
+    # the persisted per-check violations: ``violations`` is their union,
+    # or under ``violations_cap`` a capped projection over it
     violation_caches: tuple[DataFrame, ...] = ()
 
     def unpersist(self, blocking: bool = False) -> None:
@@ -66,7 +67,7 @@ class SuiteResult:
         (a 2M-image suite "ran" in 56s against 1037s of real work).
         ``blocking=True`` waits for block removal (deterministic tests).
         """
-        for d in (self.violations, *self.violation_caches, *self.cached):
+        for d in (*self.violation_caches, *self.cached):
             d.unpersist(blocking=blocking)
 
 
@@ -85,6 +86,15 @@ def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:
 _EXEMPLAR_ORDER = ["level", "entity_id", "column", "value", "threshold", "message"]
 
 
+def _check_cap(spark: SparkSession, per_cell: int) -> None:
+    limit = int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    if not 1 <= per_cell <= limit:
+        raise ValueError(
+            f"violations cap must be in [1, {limit}] "
+            f"(spark.sql.optimizer.windowGroupLimitThreshold), got {per_cell}"
+        )
+
+
 def cap_violations(violations: DataFrame, per_cell: int) -> DataFrame:
     """Bound violations to ``per_cell`` deterministic exemplars per
     (check, part) cell — the 10^12-row guard: a systematically broken
@@ -92,36 +102,22 @@ def cap_violations(violations: DataFrame, per_cell: int) -> DataFrame:
     sink itself a 10^12-row write. True counts still reach the verdict
     grid and metrics; this bounds only the row-level exemplar output.
 
-    Two-stage top-k: a partition-LOCAL cap (mapInPandas, no shuffle)
-    first reduces each input partition to its own ``per_cell`` best
-    rows per cell, so the global window rank shuffles at most
-    n_partitions × per_cell rows per cell instead of the raw
-    violation set — a dead partition with 10^9 failing rows would
-    otherwise funnel them all through one reducer. The global top-k
-    of a total order is the union of partition-local top-ks, so the
-    result is identical to ranking the full set.
+    Spark plans ``row_number() <= per_cell`` as a two-stage top-k: a
+    partial ``WindowGroupLimit`` keeps each input partition's
+    ``per_cell`` best rows per cell before the exchange, so the shuffle
+    carries at most n_partitions × per_cell rows per cell instead of
+    the raw violation set (a dead partition with 10^9 failing rows
+    would otherwise funnel them all through one reducer), and a final
+    one ranks those after it. Above the session's
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default)
+    Spark drops the partial stage without a word, so such a
+    ``per_cell`` raises ``ValueError`` instead.
     """
-    cols = list(violations.columns)
+    _check_cap(violations.sparkSession, per_cell)
     asc = [F.col(c).asc_nulls_first() for c in _EXEMPLAR_ORDER]
-
-    def local_cap(batches):
-        import pandas as pd
-
-        best: dict[tuple, "pd.DataFrame"] = {}
-        for pdf in batches:
-            for cell, grp in pdf.groupby(["check", "part"], dropna=False):
-                prev = best.get(cell)
-                cand = grp if prev is None else pd.concat([prev, grp])
-                best[cell] = cand.sort_values(
-                    _EXEMPLAR_ORDER, na_position="first", kind="mergesort"
-                ).head(per_cell)
-        if best:
-            yield pd.concat(list(best.values()))[cols]
-
-    pre = violations.mapInPandas(local_cap, schema=violations.schema)
     w = Window.partitionBy("check", "part").orderBy(*asc)
     return (
-        pre.withColumn("_rk", F.row_number().over(w))
+        violations.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= per_cell)
         .drop("_rk")
     )
@@ -195,23 +191,18 @@ class _CheckRun:
     metric_rows: list[tuple]
 
 
-def _run_check(
-    check: Check, df: DataFrame, persist_violations: bool
-) -> _CheckRun:
-    """Plan one check, persist its violations (unless capped), and
-    collect its per-cell error/warning counts and its metric rows in
-    one job. The persisted violations serve that job, the violations
-    sink and any later consumer (quarantine) without re-running the
-    check. Releases what it persisted if the job fails."""
+def _run_check(check: Check, df: DataFrame) -> _CheckRun:
+    """Plan one check, persist its violations, and collect its per-cell
+    error/warning counts and its metric rows in one job. The persisted
+    violations serve that job, the violations output (capped or not)
+    and any later consumer (quarantine) without re-running the check.
+    Releases what it persisted if the job fails."""
     df.sparkSession.sparkContext.setJobDescription(f"adt:{check.name}")
     out = check.run(df)
-    v, cached = out.violations, tuple(out.cached)
-    if persist_violations:
-        if not v.is_cached:
-            v = v.persist()
-        # a check that persists its own violations (payload,
-        # referential) hands that cache over to `violations`
-        cached = tuple(d for d in cached if d is not v)
+    v = out.violations if out.violations.is_cached else out.violations.persist()
+    # a check that persists its own violations (payload, referential)
+    # hands that cache over to `violations`
+    cached = tuple(d for d in out.cached if d is not v)
     counts_df = v.groupBy("check", "part").agg(
         F.sum(F.when(F.col("level") == "error", 1).otherwise(0)).alias("n_errors"),
         F.sum(F.when(F.col("level") == "warning", 1).otherwise(0)).alias("n_warnings"),
@@ -256,11 +247,14 @@ def run_suite(
     Each check plans and runs on its own thread (``_run_check``), so
     the checks' planning and their small jobs overlap. The verdict grid
     and the metrics are built on the driver from the rows those jobs
-    collect; ``violations`` is the union of the per-check frames. If a
-    check fails, the others finish, every cache the run made is
+    collect; ``violations`` is the union of the per-check caches,
+    capped to ``violations_cap`` exemplars per cell when that is set.
+    If a check fails, the others finish, every cache the run made is
     released and the first failure (in ``checks`` order) is raised.
     """
     spark = df.sparkSession
+    if violations_cap is not None:
+        _check_cap(spark, violations_cap)
     if part_col != "part":
         if "part" in df.columns:
             raise ValueError(
@@ -278,7 +272,8 @@ def run_suite(
     # ONE cached narrow projection instead: the binary payload column
     # (the bulk of the bytes on disk) is pruned from it, so it is the
     # smallest table that can feed stats/uniqueness/referential/drift,
-    # and the payload check alone scans the original input.
+    # and the payload check alone scans the original input. A table
+    # without a binary column is cached whole, for the same one scan.
     from pyspark.sql.types import BinaryType
 
     narrow_cols = [
@@ -286,12 +281,9 @@ def run_suite(
     ]
     cached: tuple[DataFrame, ...] = ()
     shared = df
-    if (
-        not df.is_cached  # already-persisted input: the columnar cache
-        # serves pruned scans directly; a second cache only adds cost
-        and len(narrow_cols) < len(df.schema.fields)
-        and any(not c.needs_full_input for c in checks)
-    ):
+    # an already-persisted input's columnar cache serves pruned scans
+    # directly; a second cache would only add cost
+    if not df.is_cached and any(not c.needs_full_input for c in checks):
         shared = df.select(*narrow_cols).persist()
         cached = (shared,)
 
@@ -299,20 +291,13 @@ def run_suite(
     # pass, before any check thread reads the shared cache
     all_parts = [r[0] for r in shared.select("part").distinct().collect()]
 
-    # With violations_cap set, the FULL per-check violations are never
-    # persisted (in the pathological all-rows-failing case they are
-    # input-sized): their counts aggregate map-side, served by the
-    # checks' own caches, and only the capped exemplars persist.
-    #
     # Each thread inherits the caller's Spark local properties (job
     # group, job description, scheduler pool): a plain thread would
     # start its jobs outside the caller's job group. The properties are
     # copied once per check, so a check setting its own job description
     # does not change another's.
     def run(c: Check) -> _CheckRun:
-        return _run_check(
-            c, df if c.needs_full_input else shared, violations_cap is None
-        )
+        return _run_check(c, df if c.needs_full_input else shared)
 
     with ThreadPoolExecutor(max_workers=max(1, len(checks))) as pool:
         runs = [pool.submit(inheritable_thread_target(spark)(run), c) for c in checks]
@@ -325,12 +310,11 @@ def run_suite(
     for r in done:
         cached += r.cached
 
-    violations = _union_all([r.violations for r in done], empty_violations(spark))
-    violation_caches: tuple[DataFrame, ...] = ()
-    if violations_cap is None:
-        violation_caches = tuple(r.violations for r in done)
-    else:
-        violations = cap_violations(violations, violations_cap).persist()
+    violation_caches = tuple(r.violations for r in done)
+    violations = _union_all(list(violation_caches), empty_violations(spark))
+    if violations_cap is not None:
+        # a projection over the caches: reading it ranks them again
+        violations = cap_violations(violations, violations_cap)
 
     # verdict grid: every (part, check) cell, failed iff >=1 error —
     # counts always come from the FULL violation set, never the cap.
@@ -342,7 +326,8 @@ def run_suite(
             n_err[cell] += e
             n_warn[cell] += w
     # driver-built literal relations (local_rows_df): no join, no
-    # shuffle and no Python worker behind either table
+    # shuffle and no Python worker behind either table; one partition
+    # each, so either sink gets one file per run
     from anomaly_detection_toolkit_spark.functions.localrel import local_rows_df
 
     cells = [(int(p), c.name) for p in all_parts for c in checks]
@@ -350,10 +335,10 @@ def run_suite(
         spark,
         [(*k, n_err[k], n_warn[k], -1 if n_err[k] > 0 else 1) for k in cells],
         VERDICT_SCHEMA,
-    )
+    ).coalesce(1)
     metrics = local_rows_df(
         spark, [m for r in done for m in r.metric_rows], METRICS_SCHEMA
-    )
+    ).coalesce(1)
     return SuiteResult(
         verdicts,
         violations,
@@ -709,7 +694,7 @@ def run_job(
     )
     if todo:
         # outputs are materialized — release the scratch caches
-        # (violations stay persisted for the caller)
+        # (the per-check violations stay persisted for the caller)
         for d in result.cached:
             d.unpersist()
     return result

@@ -130,7 +130,12 @@ def streaming_check_thresholds(
 
     ``state_ttl`` (e.g. ``"1 hour"``): TTL after which an idle
     (asset, feature) key's running count is evicted. By default the
-    clock is PROCESSING time (wall clock of the running query).
+    clock is PROCESSING time (wall clock of the running query). That
+    ``ProcessingTimeTimeout`` keeps the query asking for no-data
+    batches while any key holds state, so a ``trigger(availableNow=
+    True)`` query never terminates by itself, and ``processAllAvailable``
+    never returns: wait until its progress shows the last input offset
+    processed, then ``stop()`` it.
 
     ``ttl_eviction=True`` (requires ``state_ttl`` + ``ts_col``)
     switches eviction to EVENT time — the ``sliding_buffer_scores``

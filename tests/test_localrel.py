@@ -4,38 +4,58 @@ The whole point of ``functions/localrel.py`` is that small
 driver-known tables must NOT become pickled Python RDDs (4.9s per
 action for the coalesced verdict grid — BENCH/BASELINE.md round 3).
 These tests pin both the values (exact double round-trip through the
-from_json literal) and the plan (no ExistingRDD / Python scan node).
+Arrow table, NaN kept apart from NULL) and the plan (a LocalTableScan,
+no ExistingRDD / Python scan node), at a few rows and at the size of a
+large run's metric rows.
 """
 
 from __future__ import annotations
 
 import math
 
+import pytest
+
 from anomaly_detection_toolkit_spark.functions.localrel import local_rows_df
+
+ROW_COUNTS = (3, 60_000)
 
 
 def test_exact_value_round_trip(spark):
-    rows = [
+    base = [
         (0, "a", 0.1 + 0.2, None),
         (2**60, 'quote " and é', 1e-300, -1.5),
         (-7, "", 12345.6789, 0.0),
     ]
-    df = local_rows_df(spark, rows, "i bigint, s string, d double, e double")
-    assert [tuple(r) for r in df.collect()] == rows
-    assert [f.simpleString() for f in df.schema.fields] == [
-        "i:bigint",
-        "s:string",
-        "d:double",
-        "e:double",
-    ]
+    for n in ROW_COUNTS:
+        rows = [(i + b[0], b[1], b[2] / (i + 1), b[3])
+                for i, b in ((i, base[i % 3]) for i in range(n))]
+        df = local_rows_df(spark, rows, "i bigint, s string, d double, e double")
+        assert [tuple(r) for r in df.collect()] == rows, n
+        assert [f.simpleString() for f in df.schema.fields] == [
+            "i:bigint",
+            "s:string",
+            "d:double",
+            "e:double",
+        ]
 
 
 def test_non_finite_fallback(spark):
-    vals = [float("nan"), float("inf"), float("-inf"), 1.0]
-    df = local_rows_df(spark, [(v,) for v in vals], "x double")
-    got = [r[0] for r in df.collect()]
-    assert math.isnan(got[0])
-    assert got[1:] == vals[1:]
+    """NaN and ±inf come back as themselves, and NaN stays apart from
+    NULL (the pandas route would turn it into NULL)."""
+    vals = [float("nan"), float("inf"), float("-inf"), None, 1.0]
+    for n in ROW_COUNTS:
+        df = local_rows_df(spark, [(vals[i % 5],) for i in range(n)], "x double")
+        got = [r[0] for r in df.collect()]
+        assert len(got) == n
+        for i, g in enumerate(got):
+            assert math.isnan(g) if i % 5 == 0 else g == vals[i % 5], (n, i, g)
+
+
+def test_out_of_range_value_raises(spark):
+    import pyarrow as pa
+
+    with pytest.raises(pa.ArrowInvalid):
+        local_rows_df(spark, [(2**40,)], "x int")
 
 
 def test_empty_rows(spark):
@@ -45,35 +65,20 @@ def test_empty_rows(spark):
 
 
 def test_plan_has_no_python_rdd_scan(spark):
-    df = local_rows_df(spark, [(p, f"c{p%7}") for p in range(224)],
-                       "part int, check string")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # a pickled-RDD relation shows up as "Scan ExistingRDD"; the
-    # literal form must stay a Range/Generate (or folded LocalRelation)
-    assert "ExistingRDD" not in plan, plan
-    assert df.count() == 224
-
-
-def test_rows_past_the_literal_bound_become_a_scan(spark, monkeypatch):
-    """Past ``MAX_LITERAL_ROWS`` the rows go through createDataFrame (a
-    scan spread over the cluster, not one task parsing one literal),
-    with the same values, NaN and NULL included."""
-    from anomaly_detection_toolkit_spark.functions import localrel
-
-    rows = [(p, f"m{p % 3}", p / 7, None) for p in range(40)]
-    rows[5] = (5, "m2", float("nan"), 1.5)
-    ddl = "part int, metric string, value double, e double"
-    lit = local_rows_df(spark, rows, ddl)
-    monkeypatch.setattr(localrel, "MAX_LITERAL_ROWS", len(rows) - 1)
-    scan = local_rows_df(spark, rows, ddl)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan, plan
-    assert scan.schema == lit.schema
-    key = lambda r: r[0]  # noqa: E731
-    got, want = sorted(scan.collect(), key=key), sorted(lit.collect(), key=key)
-    assert math.isnan(got[5].value) and math.isnan(want[5].value)
-    assert [r for r in got if r.part != 5] == [r for r in want if r.part != 5]
-    assert tuple(got[5])[:2] + tuple(got[5])[3:] == (5, "m2", 1.5)
+    """A LocalTableScan whether Arrow execution is on or off."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            df = local_rows_df(spark, [(p, f"c{p%7}") for p in range(224)],
+                               "part int, check string")
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            # a pickled-RDD relation shows up as "Scan ExistingRDD"
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+            assert df.count() == 224
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_runner_grid_is_jvm_local(spark, sf_unit):
@@ -108,3 +113,37 @@ def test_runner_grid_is_jvm_local(spark, sf_unit):
         (p, c) for p in range(4) for c in ("column_stats", "uniqueness_doc_key")
     }
     result.unpersist()
+
+
+def _create_dataframe_calls(source: str) -> list[int]:
+    """Lines of ``source`` that call ``createDataFrame``."""
+    import ast
+
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        == "createDataFrame"
+    ]
+
+
+def test_package_has_one_literal_table_path():
+    """Every driver-built table of the package goes through
+    ``local_rows_df``: a ``createDataFrame`` call anywhere else (on a
+    list, a pickled Python RDD) fails."""
+    from pathlib import Path
+
+    assert _create_dataframe_calls("spark.createDataFrame([], 'x int')")
+    assert not _create_dataframe_calls(
+        "local_rows_df(spark, [], 'x int')  # not createDataFrame(rows)"
+    )
+    repo = Path(__file__).resolve().parent.parent
+    pkg = repo / "anomaly_detection_toolkit_spark"
+    offenders = [
+        f"{p.relative_to(repo)}:{line}"
+        for p in pkg.rglob("*.py")
+        if p != pkg / "functions" / "localrel.py"
+        for line in _create_dataframe_calls(p.read_text())
+    ]
+    assert not offenders, offenders

@@ -227,15 +227,21 @@ def test_uniqueness_uses_partial_aggregation(spark):
     assert "partial_count" in plan or "HashAggregate(keys=[phash" in plan
 
 
-def _cache_reads(df) -> Counter:
+def _cache_builder(df):
+    """The cache builder of the InMemoryRelation ``df`` is persisted as."""
+    rel = df._jdf.queryExecution().withCachedData()
+    assert rel.nodeName() == "InMemoryRelation", rel.nodeName()
+    return rel.cacheBuilder()
+
+
+def _cache_reads(df, shared=None) -> Counter:
     """The scans under the InMemoryRelation ``df`` is persisted as:
     ``InMemoryTableScanExec`` (a read of another cache, not descended
     into) and ``FileSourceScanExec`` nodes of the plan that fills the
     cache, as planned (AQE's runtime rewrites, e.g. a join over an
-    empty side folded away, do not hide a read)."""
-    rel = df._jdf.queryExecution().withCachedData()
-    assert rel.nodeName() == "InMemoryRelation", rel.nodeName()
-    todo, reads = [rel.cachedPlan()], Counter()
+    empty side folded away, do not hide a read). Reads of the cache
+    ``shared`` (a cache builder) also count under ``"shared"``."""
+    todo, reads = [_cache_builder(df).cachedPlan()], Counter()
     while todo:
         p = todo.pop()
         cls = p.getClass().getSimpleName()
@@ -243,6 +249,8 @@ def _cache_reads(df) -> Counter:
             todo.append(p.inputPlan())
         elif cls in ("InMemoryTableScanExec", "FileSourceScanExec"):
             reads[cls] += 1
+            if shared is not None and cls == "InMemoryTableScanExec":
+                reads["shared"] += p.relation().cacheBuilder().equals(shared)
         else:
             kids = p.children()
             todo.extend(kids.apply(i) for i in range(kids.size()))
@@ -250,15 +258,16 @@ def _cache_reads(df) -> Counter:
 
 
 def test_suite_grid_documents_feeds_checks_from_cache(spark):
-    """The oracle-checked suite grid on the DuckDB-replicable path:
-    each check that builds a small intermediate table (per-part stats,
-    duplicate keys, drift histogram) persists it, and the plan under
-    that check's persisted violations reads the intermediate from its
-    cache (InMemoryTableScan) instead of recomputing it from the
-    documents parquet — the same cost model as the image suite. The
-    referential check persists its violations themselves, so nothing
-    below them is cached. The grid is driver-built, so the reads are
-    taken per check, below each of the run's violation caches."""
+    """The oracle-checked suite grid on the DuckDB-replicable path, a
+    table without a binary column: the run caches the fact once and
+    every scanning check reads that cache, so one ``run_suite`` scans
+    the documents parquet through exactly one FileSourceScanExec —
+    the same cost model as the image suite. Each check that builds a
+    small intermediate table (per-part stats, duplicate keys, drift
+    histogram) persists it, and the plan under that check's persisted
+    violations reads the intermediate from its cache instead of
+    recomputing it. The grid is driver-built, so the reads are taken
+    per check, below each of the run's violation caches."""
     from anomaly_detection_toolkit_spark.entry_suite import (
         _suite_grid_checks,
         _suite_grid_fact,
@@ -268,14 +277,26 @@ def test_suite_grid_documents_feeds_checks_from_cache(spark):
     checks = _suite_grid_checks()
     result = run_suite(_suite_grid_fact(spark, "/root/testdata/sf0.001"), checks)
     try:
+        shared = _cache_builder(result.cached[0])
         reads = {
-            c.name: _cache_reads(v) for c, v in zip(checks, result.violation_caches)
+            c.name: _cache_reads(v, shared)
+            for c, v in zip(checks, result.violation_caches)
         }
         assert len(reads) == len(checks)
         fed = {n for n, r in reads.items() if r["InMemoryTableScanExec"]}
         assert fed == {
             "column_stats", "uniqueness_doc_key", "uniqueness_phash16", "drift",
+            "referential_caption",
         }, reads
+        own = {n for n, r in reads.items() if r["InMemoryTableScanExec"] > r["shared"]}
+        assert own == {
+            "column_stats", "uniqueness_doc_key", "uniqueness_phash16", "drift",
+        }, reads
+        scans = sum(
+            (_cache_reads(c) for c in (*result.violation_caches, *result.cached)),
+            Counter(),
+        )
+        assert scans["FileSourceScanExec"] == 1, scans
         rows = result.verdicts.collect()
         assert {r.check for r in rows} == set(reads)
         # non-trivial grid: failures AND passes both present
@@ -286,12 +307,15 @@ def test_suite_grid_documents_feeds_checks_from_cache(spark):
 
 
 def test_check_metrics_read_their_violation_caches(spark, tmp_path):
-    """Metrics and violations are materialized as SEPARATE jobs by the
-    runner; each expensive check must therefore persist its sparse
-    output so the metrics job reads the cache instead of re-running
-    the payload decode (the suite's dominant stage), the anti-join, or
-    the full-cardinality key shuffle a second time (round-3 profile:
-    payload 7.1s → 3.6s at 100k)."""
+    """Each expensive check persists its sparse output so that its
+    metrics read the cache instead of re-running the payload decode
+    (the suite's dominant stage), the anti-join, or the
+    full-cardinality key shuffle a second time (round-3 profile:
+    payload 7.1s → 3.6s at 100k). In the runner, the check's one
+    collect job reads that cache from both its counts and its metrics
+    branches; a standalone ``check.run`` caller (perfbench probes,
+    tools/suite_stress.py) materializes violations and metrics as
+    separate jobs, as this test does."""
     from anomaly_detection_toolkit_spark.plans.checks import (
         PayloadCheck,
         ReferentialCheck,
@@ -599,8 +623,8 @@ def test_violations_cap_bounds_exemplars_keeps_exact_counts(spark, tmp_path):
 
 def test_violations_cap_is_partitioning_invariant(spark):
     """The capped exemplar SET is a pure function of the violation
-    values: local-top-k union global-rank must pick identical rows
-    whatever the input partitioning."""
+    values: the partial and final window group limits must pick
+    identical rows whatever the input partitioning."""
     from anomaly_detection_toolkit_spark.plans.checks import VIOLATION_SCHEMA
     from anomaly_detection_toolkit_spark.plans.runner import cap_violations
 
@@ -630,6 +654,79 @@ def test_violations_cap_is_partitioning_invariant(spark):
         by_cell.setdefault(t[4], []).append(t[1])
     for levels in by_cell.values():
         assert levels == sorted(levels)  # 'error' < 'warning'
+
+
+def _walk(plan):
+    """``(class name, node, under_exchange)`` for every node of a
+    physical plan, through AQE's current plan and its query stages;
+    ``under_exchange`` is true below a shuffle exchange."""
+    todo = [(plan, False)]
+    while todo:
+        p, under = todo.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append((p.executedPlan(), under))
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append((p.plan(), under))
+            continue
+        yield cls, p, under
+        under = under or cls == "ShuffleExchangeExec"
+        kids = p.children()
+        todo.extend((kids.apply(i), under) for i in range(kids.size()))
+
+
+def test_violations_cap_plan_and_caches(spark, tmp_path):
+    """Under the cap every check's violations are still a cache of
+    their own and the capped frame is an unpersisted projection over
+    them: Spark's window group limit (a Partial WindowGroupLimit below
+    the exchange, a Final one above it), no Python map. Unpersisting
+    the result releases every cache."""
+    from anomaly_detection_toolkit_spark.plans.checks import default_suite
+    from anomaly_detection_toolkit_spark.plans.runner import run_suite
+
+    df = _image_table(spark, tmp_path, 200, 2)
+    suite = default_suite()
+    before = _persisted_rdd_ids(spark)
+    res = run_suite(df, suite, violations_cap=3)
+    try:
+        assert len(res.violation_caches) == len(suite)
+        assert all(c.is_cached for c in res.violation_caches)
+        assert not res.violations.storageLevel.useMemory
+        res.violations.collect()  # the final adaptive plan
+        nodes = list(_walk(res.violations._jdf.queryExecution().executedPlan()))
+        limits = {
+            (p.mode().toString(), under)
+            for cls, p, under in nodes
+            if cls == "WindowGroupLimitExec"
+        }
+        assert limits == {("Partial", True), ("Final", False)}, limits
+        python = {c for c, _, _ in nodes if c in ("MapInPandasExec", "PythonMapInArrowExec")}
+        assert not python, python
+        new = _persisted_rdd_ids(spark) - before
+        assert new
+    finally:
+        res.unpersist(blocking=True)
+    assert not _persisted_rdd_ids(spark) & new
+
+
+def test_violations_cap_range_is_checked(spark):
+    """A cap below 1 or above the session's window-group-limit
+    threshold (where Spark would drop the partial limit) raises, from
+    ``cap_violations`` and from ``run_suite`` before any check runs."""
+    from anomaly_detection_toolkit_spark.functions.localrel import local_rows_df
+    from anomaly_detection_toolkit_spark.plans.checks import VIOLATION_SCHEMA
+    from anomaly_detection_toolkit_spark.plans.runner import cap_violations, run_suite
+
+    limit = int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    empty = local_rows_df(spark, [], VIOLATION_SCHEMA)
+    table = local_rows_df(spark, [(0,)], "part int")
+    for k in (0, limit + 1):
+        with pytest.raises(ValueError, match="violations cap"):
+            cap_violations(empty, k)
+        with pytest.raises(ValueError, match="violations cap"):
+            run_suite(table, [], violations_cap=k)
+    assert cap_violations(empty, limit).count() == 0
 
 
 def test_clean_table_auto_switches_join(spark):

@@ -21,6 +21,17 @@ from anomaly_detection_toolkit_spark.streaming.ingestion import (
 W = 5
 
 
+@pytest.fixture(autouse=True)
+def no_stream_left_running(spark):
+    """A test must stop every query it starts: one left running keeps
+    scheduling micro-batches through the rest of the session."""
+    yield
+    active = [q.name for q in spark.streams.active]
+    for q in spark.streams.active:
+        q.stop()
+    assert not active, f"streaming queries left active: {active}"
+
+
 def _points():
     """Two assets, interleaved, with a spike that must be flagged."""
     pts = []
@@ -194,8 +205,32 @@ def _run_files(spark, tmp_path, batches, build, name):
         .outputMode("append")
         .start()
     )
-    q.awaitTermination(120)
+    _stop_after_last_file(q, len(batches))
     return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def _stop_after_last_file(q, n_files, timeout_s=120.0):
+    """Wait until the query ends by itself, or has run one batch past
+    the one that read its last input file (one file per batch; that
+    next, no-data batch applies the watermark the last file advanced),
+    then stop it. Not ``awaitTermination`` or ``processAllAvailable``:
+    under ``state_ttl`` the processing-time timeout keeps an
+    availableNow query running no-data batches, so it neither ends nor
+    runs out of work."""
+    import time as _time
+
+    deadline = _time.monotonic() + timeout_s
+    while q.isActive:
+        p = q.lastProgress
+        if p is not None and p.batchId >= n_files:
+            break
+        if _time.monotonic() > deadline:
+            q.stop()
+            raise RuntimeError(f"{q.name} did not read {n_files} files in {timeout_s}s")
+        _time.sleep(0.1)
+    q.stop()
+    if q.exception() is not None:
+        raise q.exception()
 
 
 def test_event_time_ttl_evicts_idle_asset(spark, tmp_path):
